@@ -7,20 +7,93 @@ value-hash -> CORRECTNESS_r{N}.json).
 
 All query definitions live in ``sql_query_engine_rs_spark.queries`` — one
 (Spark builder, DuckDB oracle) pair per operator from SURVEY.md §2 plus the
-training-data pipeline extensions.
+training-data pipeline extensions. This module owns only the order in which
+the driver sees them (see ``_ordered_names``).
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
-from sql_query_engine_rs_spark.queries import QUERIES, all_oracles, all_queries  # noqa: E402
+from sql_query_engine_rs_spark.queries import QUERIES  # noqa: E402
+
+# The driver verifies only the first ``_WINDOW_SIZE`` entries of
+# ``queries()`` per round, so ordering IS the coverage budget.
+_WINDOW_SIZE = 50
+
+
+def _correctness_rows() -> dict[int, dict]:
+    """round number -> parsed row dict, for every parseable
+    CORRECTNESS_r*.json beside this module. Unparseable or non-dict files
+    contribute nothing (fresh checkout / truncated artifact tolerance)."""
+    out: dict[int, dict] = {}
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        stem = os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")]
+        try:
+            rnd = int(stem)
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if isinstance(rows, dict):
+            out[rnd] = rows
+    return out
+
+
+def _green_rounds() -> dict[str, int]:
+    """name -> LATEST driver round with a green row for that entry.
+
+    Reading the driver's own artifacts makes the window self-staging:
+    entries that already have a green row yield their slot to unchecked
+    ones without a hand-maintained list each round.  A full-oracle row is
+    green when the value hash matched; a rows-only row (no oracle) when the
+    row count matched.
+    """
+    latest: dict[str, int] = {}
+    for rnd, rows in _correctness_rows().items():
+        for name, row in rows.items():
+            if not isinstance(row, dict) or row.get("err"):
+                continue
+            hash_ok = row.get("hash_match")
+            if hash_ok or (hash_ok is None and row.get("rows_match")):
+                if rnd > latest.get(name, 0):
+                    latest[name] = rnd
+    return latest
+
+
+def _stalest_pad() -> list[str]:
+    """Green entries ordered stalest-first: ascending latest-green round,
+    ties broken by registry insertion order.
+
+    Era-invariant by construction: when round N's file lands, its re-rowed
+    entries get latest-green = N and sink to the tail of the pad, so the
+    stalest-first order holds in every era without a hand-maintained list.
+    """
+    rounds = _green_rounds()
+    order = {n: i for i, n in enumerate(QUERIES)}
+    return sorted(
+        (n for n in rounds if n in QUERIES),
+        key=lambda n: (rounds[n], order[n]),
+    )
+
+
+def _ordered_names() -> list[str]:
+    """The window (entries without a green row first, then green entries
+    stalest-first) followed by the rest of the registry in its own order."""
+    green = _green_rounds()
+    unchecked = [n for n in QUERIES if n not in green]
+    window = (unchecked + _stalest_pad())[:_WINDOW_SIZE]
+    seen = set(window)
+    return window + [n for n in QUERIES if n not in seen]
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -30,9 +103,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return all_queries()
+    return {name: QUERIES[name].build for name in _ordered_names()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
-    return all_oracles()
+    return {
+        name: QUERIES[name].oracle
+        for name in _ordered_names()
+        if QUERIES[name].oracle is not None
+    }

@@ -28,423 +28,27 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 HEADLINE_SF = 0.1
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Headline set: every operator family, weighted toward the scan/agg/join
-# paths that dominate at scale.
-BENCH_QUERIES = [
-    "v0_filter_comparison",
-    "v0_simple_agg",
-    "v0_hash_agg_multi",
-    "ext_tpch_q1",
-    "ext_tpch_q3",
-    "ext_tpch_q5",
-    "ext_tpch_q6",
-    "ext_join_broadcast",
-    "ext_left_join",
-    "ext_order_by_limit",
-    "ext_window_rank",
-    "ext_events_window",
-    "ext_sessionize",
-    "ext_asof_join",
-    "ext_explode_tokens",
-    "pipe_dedup_exact",
-    "pipe_fingerprint_dedup",
-    "pipe_minhash_lsh",
-    "pipe_embedding_topk",
-    "pipe_token_count",
-    "pipe_quality_filter",
-    "pipe_group_normalize",
-    "ext_tpch_q7",
-    "ext_tpch_q8",
-    "ext_tpch_q13",
-    "ext_tpch_q18",
-    "ext_grouping_sets",
-    "pipe_ann_ivf",
-    # iterative / streaming / broadcast-probe / global-sort paths — benched
-    # so round-over-round regressions in these engine paths are visible
-    "pipe_dup_clusters",
-    "pipe_decontaminate",
-    "stream_interval_join",
-    "ext_global_sort",
-    # round-2 additions: retrieval (explode-heavy), posexplode aggregation,
-    # and the composed curation pipeline
-    "pipe_bm25",
-    "pipe_label_centroids",
-    "pipe_corpus_curation",
-    # round-4 additions: the capped SimHash flagship, the bucketed embedding
-    # near-dup (now the registered path), the salted inverted index, the
-    # applyInPandasWithState drain, and the new TF-IDF / histogram ops
-    "pipe_simhash",
-    "pipe_embedding_near_dup",
-    "pipe_inverted_index",
-    "stream_custom_state",
-    "stream_session_windows",
-    "pipe_tfidf_topterms",
-    "pipe_token_histogram",
-    "pipe_unigram_logprob",
-    "pipe_source_quality_rollup",
-    "pipe_video_frames",
-    # round-5 additions: the OR-amplified embedding near-dup (new registered
-    # plan), the hot-key-hardened as-of join, the salted stratified sample,
-    # the expiry-armed custom stateful drain, and the sketch rollups
-    "ext_asof_join_bucketed",
-    "pipe_stratified_sample",
-    "stream_custom_state_expiry",
-    "pipe_sketch_rollup",
-    "pipe_quantile_rollup",
-    # round-5 second wave: semantic dedup (IVF codebook + within-cell pair
-    # scan), the corpus-frequency boilerplate join, the zero-shuffle
-    # classifier pass, and the mixture-weighted take
-    "pipe_semdedup",
-    "pipe_boilerplate_ngrams",
-    "pipe_quality_classifier",
-    "pipe_mixture_sample",
-    # round-5 fourth wave: PQ/ADC ANN (Lloyd-refined codebook), the
-    # sentinel-flushed stream-stream outer join, BPE pair counting over the
-    # vocab-reduced word table, per-doc entropy, and the percentile trim
-    "pipe_ann_pq",
-    "stream_outer_join",
-    "stream_foreachbatch_upsert",
-    "pipe_bpe_pair_counts",
-    "pipe_doc_entropy",
-    "pipe_length_trim",
-    # fifth wave: first-occurrence novelty (gram-keyed min-agg), the
-    # bucketed padding audit, and the per-source KL drift monitor
-    "pipe_ngram_novelty",
-    "pipe_length_bucket_pack",
-    "pipe_kl_source_drift",
-    "pipe_span_corruption",
-    "ext_decimal_agg",
-    "ext_funnel_stages",
-    "pipe_chunk_retrieval",
-    "pipe_hard_negatives",
-    "pipe_oov_rate",
-    "pipe_key_skew_report",
-    "ext_interval_union",
-    "pipe_emb_quantize_int8",
-    "pipe_cross_corpus_dedup",
-    # round-5 sixth wave: span-level exact-substring dedup (the heaviest
-    # text op — positional grams + coverage rewrite), DSIR scoring +
-    # Gumbel-top-k selection, the mergeable sketches (count-min, bloom),
-    # the MinHash calibration audit, the iterative recursive-hierarchy
-    # loop, RANGE frames / gaps-islands on events, and the CDC diff
-    "pipe_exact_substring_dedup",
-    "pipe_dsir_weights",
-    "pipe_dsir_resample",
-    "pipe_countmin_heavyhitters",
-    "pipe_bloom_membership",
-    "pipe_minhash_jaccard_est",
-    "pipe_zipf_slope",
-    "pipe_tokenizer_fertility",
-    "ext_recursive_hierarchy",
-    "ext_window_range_frame",
-    "ext_gaps_islands",
-    "ext_histogram",
-    "ext_snapshot_diff",
-    "stream_static_enrich",
-    "stream_topk_per_window",
-    "pipe_containment_dups",
-    "pipe_emb_outliers",
-    "pipe_eval_split_carve",
-    "pipe_lang_confusion",
-    "pipe_dataset_card",
-    "stream_blocklist_filter",
-    "ext_set_ops_all",
-    "ext_order_by_nulls",
-    "pipe_ppl_bucket_filter",
-    "stream_sliding_windows",
-    "pipe_pmi_collocations",
-    "ext_any_all_quantified",
-    "pipe_dup_cluster_sizes",
-    "pipe_lang_balance_weights",
-    "pipe_rep_span_removal",
-    "pipe_entropy_rate",
-    # round-6 additions: the two-level-assignment SemDeDup twin, the
-    # streaming dedup-index maintenance loop, the corpus-wide k-NN graph,
-    # the sharding balance audit, and quality-argmax survivorship
-    "pipe_semdedup_hierarchical",
-    "stream_dedup_index_upsert",
-    "pipe_knn_graph",
-    "pipe_shard_assignment",
-    "pipe_dedup_survivorship",
-    "pipe_ann_two_stage",
-    "pipe_sequence_packing",
-    "pipe_mutual_knn",
-    "pipe_moments_merge",
-    "pipe_ingest_anomaly",
-    "pipe_token_gini",
-    "pipe_source_overlap",
-    "pipe_label_centroid_sim",
-    "pipe_charclass_audit",
-    "pipe_distinct_ngrams",
-    "ext_window_dist_funcs",
-    "pipe_graph_pagerank",
-    "pipe_join_skew_audit",
-    "pipe_event_transitions",
-    "pipe_graph_degree_dist",
-    "ext_nth_value_window",
-    "pipe_ann_nprobe_sweep",
-    "pipe_fk_integrity",
-    "stream_event_transitions",
-    "pipe_emb_norm_audit",
-    "pipe_length_quality_hist",
-    "ext_yoy_growth",
-    "pipe_source_dup_matrix",
-    "pipe_centroid_drift",
-    "pipe_kcenter_coreset",
-    "pipe_lsh_bucket_balance",
-    "pipe_pq_distortion",
-    "pipe_knn_label_purity",
-    "pipe_jaccard_threshold_sweep",
-    "pipe_hub_impact",
-    "pipe_maxsim_late_interaction",
-    "pipe_rrf_fusion",
-    "pipe_mmr_diversify",
-    "pipe_ann_ndcg",
-    "pipe_editdist_dedup",
-    "pipe_dup_transitivity",
-    "pipe_dedup_mixture_shift",
-    "pipe_events_autocorr",
-    "pipe_basket_lift",
-    "pipe_rfm_segments",
-    "pipe_winsorized_stats",
-    "pipe_purchase_attribution",
-    "stream_purchase_attribution",
-    "pipe_cov_spectrum",
-    "pipe_zorder_layout",
-    "pipe_delete_cascade_audit",
-    "ext_limit_offset",
-    "pipe_partitioned_write_prune",
-    "pipe_approx_quantile_audit",
-    "pipe_traffic_heatmap",
-    "pipe_conversion_latency",
-    "pipe_schema_evolution",
-    # round-6 late batch: physical-layout co-location (bucketed write +
-    # exchange-free join), sparse-postings cosine, the DataFrame Lloyd
-    # loop, time-series monitoring (batch + streaming EWMA, CUSUM), the
-    # data-quality contract scan, distribution tests, resampling, and
-    # closed-form regression
-    "pipe_bucketed_join_audit",
-    "pipe_sparse_cosine_dups",
-    "pipe_kmeans_lloyd",
-    "pipe_ewma_anomaly",
-    "pipe_cusum_changepoint",
-    "pipe_dq_expectations",
-    "pipe_js_source_divergence",
-    "pipe_record_linkage",
-    "pipe_welch_ttest",
-    "pipe_ks_test",
-    "pipe_corr_matrix",
-    "pipe_bootstrap_ci",
-    "pipe_ols_two_feature",
-    "stream_ewma_monitor",
-    "pipe_chi2_association",
-    "pipe_permutation_test",
-    "pipe_mannwhitney_u",
-    "pipe_freshness_decay",
-    "pipe_seasonal_decompose",
-    "pipe_feature_hashing",
-    "pipe_wasserstein_drift",
-    "pipe_benford_audit",
-    "pipe_forecast_backtest",
-    "pipe_sax_motifs",
-    "pipe_auc_roc",
-    "pipe_pairwise_ttest",
-    "pipe_calibration_ece",
-    "pipe_classifier_metrics",
-    "pipe_psi_drift",
-    "pipe_cohort_retention",
-    "pipe_lift_deciles",
-    "pipe_kanonymity_audit",
-    "pipe_cohen_kappa",
-    "pipe_mad_outliers",
-    "pipe_naive_bayes",
-    "pipe_decision_stump",
-    "pipe_eb_shrinkage",
-    "pipe_kaplan_meier",
-    "pipe_theil_sen",
-    "pipe_ab_srm_check",
-    "pipe_logreg_gd",
-    "pipe_lpa_communities",
-    "pipe_jl_projection",
-    "stream_late_data_drop",
-    "pipe_kfold_cv",
-    "pipe_power_analysis",
-    "pipe_link_prediction",
-    "pipe_anova_oneway",
-    "pipe_centroid_classifier",
-    "pipe_bpe_merge_train",
-    "pipe_diff_in_diff",
-    "pipe_mutual_info_rank",
-    "pipe_target_encoding",
-    "pipe_kcore_decompose",
-    "pipe_seq_trigrams",
-    "pipe_silhouette_simplified",
-    "pipe_overdispersion_check",
-    "pipe_graph_assortativity",
-    "pipe_watermark_budget",
-    "pipe_reshard_audit",
-    "pipe_heaps_law",
-    "pipe_shapley_attribution",
-    "pipe_retention_ttl_sizing",
-    "pipe_join_size_estimate",
-    "pipe_embedding_drift_mmd",
-    "pipe_vocab_prune_curve",
-    "pipe_simpson_audit",
-    "pipe_hill_tail_index",
-    "pipe_dp_count_noise",
-    "pipe_ratio_metric_ab",
-    "stream_min_watermark_union",
-    "pipe_uplift_segments",
-    "pipe_cuped_adjustment",
-    "pipe_dedup_method_agreement",
-    "pipe_topk_stability",
-    "pipe_bradley_terry",
-    "pipe_fleiss_kappa",
-    "pipe_sinkhorn_ot",
-    "pipe_token_budget_mix",
-    "pipe_log_odds_terms",
-    "pipe_conformal_interval",
-    "pipe_skipgram_pairs",
-    "pipe_shard_coverage_curve",
-    "pipe_quantile_normalize",
-    "ext_variant_semistructured",
-    "pipe_observed_funnel_metrics",
-    "stream_variant_telemetry",
-    "pipe_class_balance_reweight",
-    "pipe_slo_burn_rate",
-    "pipe_ldiversity_audit",
-    "pipe_group_sequential_test",
-    "pipe_cem_att",
-    # round-7 additions (registration freeze round — only the auto-default
-    # twins the verdict ordered): the derived-k SemDeDup, the derived-planes
-    # near-dup, and the distributed zorder range-bucket write audit
-    "pipe_semdedup_auto_k",
-    "pipe_embedding_near_dup_auto",
-    "pipe_zorder_range_layout",
-]
+HERE = os.path.dirname(os.path.abspath(__file__))
 
-# Round-13 re-baseline (r12 VERDICT item 5): the remaining 107 registry
-# entries — the whole r11 crawl-curation wave, the incremental dedup/minhash
-# probes, and the cheap v0/ext surface — previously had NO perf tracking.
-# They are ADDED (never removing/renaming a legacy entry); every
-# pre-existing field of the one-line JSON ("value", "queries", "median",
-# "max", "cold_value", "n_queries") keeps the legacy-256 population so
-# round-over-round comparison survives, and the full-set totals ride new
-# additive fields ("value_full", "n_queries_full"). pipe_curation_funnel
-# (the ~11 s composite the legacy list deliberately excluded) is in the
-# FULL population only, so it cannot distort the comparable legacy total.
-FULL_BENCH_ADDITIONS = [
-    "v0_scan",
-    "v0_projection",
-    "v0_filter_equality",
-    "v0_project_arithmetic",
-    "v0_hash_agg",
-    "v0_agg_null_semantics",
-    "v0_type_cast",
-    "v0_select_constant",
-    "ext_avg_count_distinct",
-    "ext_distinct",
-    "ext_join_fact",
-    "ext_having",
-    "ext_subquery_in",
-    "ext_scalar_subquery",
-    "ext_union",
-    "ext_intersect",
-    "ext_except",
-    "ext_window_running",
-    "ext_rollup",
-    "ext_case_when",
-    "ext_string_funcs",
-    "ext_date_funcs",
-    "ext_json_extract",
-    "ext_anti_join",
-    "ext_semi_exists",
-    "ext_cube",
-    "ext_pivot",
-    "ext_percentiles",
-    "ext_array_agg",
-    "ext_asof_join_forward",
-    "ext_range_join",
-    "ext_window_first_last",
-    "ext_qualify",
-    "ext_distinct_on",
-    "ext_regexp_extract",
-    "ext_null_funcs",
-    "ext_levenshtein",
-    "ext_window_battery",
-    "ext_argmax_agg",
-    "ext_date_arithmetic",
-    "ext_unpivot",
-    "ext_scd2_merge",
-    "ext_correlated_subquery",
-    "ext_cross_join",
-    "ext_stats_agg",
-    "ext_regr_agg",
-    "ext_median_mode",
-    "ext_lateral_join",
-    "ext_bool_string_agg",
-    "ext_window_frames",
-    "ext_array_funcs",
-    "ext_resample_gapfill",
-    "ext_full_outer_join",
-    "ext_approx_distinct",
-    "ext_null_safe_join",
-    "ext_filtered_agg",
-    "ext_map_struct_funcs",
-    "ext_bitwise_agg",
-    "ext_try_arith",
-    "ext_explode_outer",
-    "ext_asof_join_nearest",
-    "ext_window_count_distinct",
-    "ext_tpch_q2",
-    "ext_tpch_q4",
-    "ext_tpch_q9",
-    "ext_tpch_q10",
-    "ext_tpch_q11",
-    "ext_tpch_q12",
-    "ext_tpch_q14",
-    "ext_tpch_q15",
-    "ext_tpch_q16",
-    "ext_tpch_q17",
-    "ext_tpch_q19",
-    "ext_tpch_q20",
-    "ext_tpch_q21",
-    "ext_tpch_q22",
-    "pipe_dedup_groups",
-    "pipe_ngram_jaccard",
-    "pipe_ann_lsh",
-    "pipe_lang_id",
-    "pipe_quality_score",
-    "pipe_text_stats",
-    "pipe_multimodal_features",
-    "pipe_hash_sample",
-    "pipe_repetition_score",
-    "pipe_embedding_dedup_lsh",
-    "pipe_char_shingle_sketch",
-    "pipe_dedup_keeplist",
-    "pipe_ann_ivf_bucketed",
-    "pipe_pii_scrub",
-    "pipe_chunk_documents",
-    "pipe_audio_features",
-    "pipe_table_profile",
-    "pipe_bigram_logprob",
-    "pipe_vocab_coverage",
-    "pipe_winnow_dups",
-    "pipe_domain_cap",
-    "pipe_weighted_sample",
-    "pipe_chunk_dedup_ratio",
-    "pipe_curation_funnel",
-    "pipe_incremental_dedup",
-    "pipe_url_dedup",
-    "pipe_decontam_diff",
-    "pipe_incremental_minhash",
-    "stream_windowed_counts",
-    "stream_dedup",
-    "stream_url_dedup_upsert",
-]
+# The whole registry is benched, in registry order (each COHORT_SIZE run of
+# it shares one session).
+BENCH_QUERIES = list(QUERIES)
 
-LEGACY_BENCH_QUERIES = BENCH_QUERIES
-BENCH_QUERIES = LEGACY_BENCH_QUERIES + FULL_BENCH_ADDITIONS
+
+def _legacy_bench_queries() -> list[str]:
+    """The legacy-256 population: the key set of the committed
+    BENCH_QUERIES_r12.json, the last map taken before the whole registry
+    was benched. Every pre-existing field of the one-line JSON ("value",
+    "queries", "median", "max", "cold_value", "n_queries") is computed over
+    it so round-over-round comparison survives; the full-registry totals
+    ride the additive "value_full"/"n_queries_full" fields."""
+    path = os.path.join(HERE, "BENCH_QUERIES_r12.json")
+    try:
+        with open(path) as f:
+            names = list(json.load(f)["queries"])
+    except (OSError, ValueError, KeyError, TypeError) as e:
+        raise SystemExit(f"bench: cannot read the legacy query set from {path}: {e!r}") from None
+    return names
 
 
 def _read_trials() -> int:
@@ -564,9 +168,8 @@ def _latest_committed_query_map() -> dict[str, float]:
     """The newest round-stamped per-query steady map beside this script —
     the burst-retry pass's reference. Missing/unparseable files (fresh
     checkout, round 1) mean no retry pass, never an error."""
-    here = os.path.dirname(os.path.abspath(__file__))
     best: tuple[int, dict[str, float]] = (0, {})
-    for p in glob.glob(os.path.join(here, "BENCH_QUERIES_r*.json")):
+    for p in glob.glob(os.path.join(HERE, "BENCH_QUERIES_r*.json")):
         stem = os.path.basename(p)[len("BENCH_QUERIES_r"):-len(".json")]
         if not stem.isdigit():
             continue
@@ -577,8 +180,9 @@ def _latest_committed_query_map() -> dict[str, float]:
             continue
         # A map taken at a different core count (the driver also runs the
         # bench at low CPUS to measure scaling) is not a valid burst/noise
-        # reference for this run; skip it when the stamp records its cpus.
-        if "cpus" in data and str(data["cpus"]) != str(CPUS):
+        # reference for this run; nor is a stamp that does not record its
+        # cpus (r09-r12 were taken at 32).
+        if str(data.get("cpus")) != str(CPUS):
             continue
         q = data.get("queries")
         if isinstance(q, dict) and int(stem) >= best[0]:
@@ -688,7 +292,7 @@ def main() -> None:
         raw_times[n] / ref[n] for n in raw_times if ref.get(n) and ref[n] > 0
     )
     noise_ratio_median = round(ratios[len(ratios) // 2], 3) if ratios else None
-    legacy = set(LEGACY_BENCH_QUERIES)
+    legacy = set(_legacy_bench_queries())
     wash_meta = {
         "total_raw": round(sum(raw_times.values()), 3),
         "total_raw_legacy": round(
@@ -709,10 +313,9 @@ def main() -> None:
     # both beside this script; "queries" on the line carries only the
     # slowest handful so the driver schema stays populated without
     # re-growing the line. tests/test_pipeline_ops.py pins the line <2 KB.
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "bench_trials.json"), "w") as f:
+    with open(os.path.join(HERE, "bench_trials.json"), "w") as f:
         json.dump({"sf": float(sf), "trials": trials}, f, indent=1)
-    with open(os.path.join(here, "bench_queries.json"), "w") as f:
+    with open(os.path.join(HERE, "bench_queries.json"), "w") as f:
         json.dump(
             {"sf": float(sf), "queries": times, "cold": cold, "unit": "sec", **wash_meta},
             f,
@@ -735,11 +338,11 @@ def main() -> None:
     if bench_queries == BENCH_QUERIES and float(sf) == HEADLINE_SF:
         rounds = [
             int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
-            for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
+            for p in glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json"))
             if os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")].isdigit()
         ]
         stamp = max(rounds, default=0) + 1
-        with open(os.path.join(here, f"BENCH_QUERIES_r{stamp:02d}.json"), "w") as f:
+        with open(os.path.join(HERE, f"BENCH_QUERIES_r{stamp:02d}.json"), "w") as f:
             json.dump(
                 {"sf": float(sf), "unit": "sec", "queries": times, "cold": cold, **wash_meta},
                 f,
@@ -765,8 +368,9 @@ def summary_line(times, cold, sf, retried=0, wash_meta=None):
     legacy sum — what one uncontrolled run reads) and "noise_ratio_median"
     (this run's median per-query ratio vs the last committed same-cpus map;
     ~1.0 on a quiet box) let the driver wash its own round-over-round
-    comparison (r12 VERDICT item 1)."""
-    legacy = set(LEGACY_BENCH_QUERIES)
+    comparison (r12 VERDICT item 1); "cpus" says which core count the
+    numbers belong to."""
+    legacy = set(_legacy_bench_queries())
     ltimes = {n: v for n, v in times.items() if n in legacy}
     lcold = {n: v for n, v in cold.items() if n in legacy}
     sorted_times = sorted(ltimes.values())
@@ -788,6 +392,7 @@ def summary_line(times, cold, sf, retried=0, wash_meta=None):
         "n_queries_full": len(times),
         "total_raw": wash_meta.get("total_raw_legacy"),
         "noise_ratio_median": wash_meta.get("noise_ratio_median"),
+        "cpus": int(CPUS),
         "note": f"min-of-warm steady total over the {n} legacy queries (comparable round-over-round); value_full/n_queries_full cover the full {len(times)}-entry registry benched since r13; queries shows the legacy 5 slowest; full per-query map in bench_queries.json, raw {TRIALS}-trial arrays in bench_trials.json; fresh session every {COHORT_SIZE} queries; retried = cohort-burst outliers re-measured fresh-session (min kept); total_raw = pre-retry legacy sum; noise_ratio_median = this run vs last committed same-cpus map (~1.0 = quiet box)",
     }
 

@@ -3,33 +3,21 @@
 Usage: python scripts/capture_plans.py <out_dir> <suffix> name1,name2[,...]
 
 Builds each entry with the engine session at $SPARK_GRAFT_SF_DIR (default
-sf0.1) and writes <out_dir>/<name>_<suffix>.txt plus a one-line summary of
-Exchange / parquet-scan / join / window node counts to stdout. Building a
-query executes its eager materialization barriers (and, for stream_*
-entries, the whole drain) — that is the committed behavior being
-documented, not a side effect.
+sf0.1) and writes <out_dir>/<name>_<suffix>.txt plus one line per entry of
+its ``plans.plan_report`` counts to stdout. Building a query executes its
+eager materialization barriers (and, for stream_* entries, the whole drain)
+— that is the committed behavior being documented, not a side effect.
 """
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-
-def plan_counts(plan: str) -> dict[str, int]:
-    return {
-        "Exchange": len(re.findall(r"\bExchange\b", plan)),
-        "parquet_scans": len(re.findall(r"Scan parquet", plan)),
-        "SortMergeJoin": len(re.findall(r"\bSortMergeJoin\b", plan)),
-        "BroadcastHashJoin": len(re.findall(r"\bBroadcastHashJoin\b", plan)),
-        "Window": len(re.findall(r"^\s*\S*\s*Window\b", plan, re.M)),
-        "InMemoryTableScan": len(re.findall(r"InMemoryTableScan", plan)),
-        "ExistingRDD": len(re.findall(r"ExistingRDD", plan)),
-    }
+from sql_query_engine_rs_spark.plans import explain_str, plan_report  # noqa: E402
 
 
 def main() -> int:
@@ -37,22 +25,18 @@ def main() -> int:
     names = [n.strip() for n in raw.split(",") if n.strip()]
     os.makedirs(out_dir, exist_ok=True)
 
+    from sql_query_engine_rs_spark.functions.caching import release_caches
     from sql_query_engine_rs_spark.queries import QUERIES
     from sql_query_engine_rs_spark.session import get_spark
 
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    from sql_query_engine_rs_spark.functions.caching import release_caches
-
     for name in names:
         df = QUERIES[name].build(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(name, plan_counts(plan))
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
+            fh.write(explain_str(df))
+        report = plan_report(df)
+        print(name, {k: v for k, v in report.items() if k != "pushed_filters"})
         release_caches()
     spark.stop()
     return 0

@@ -190,102 +190,53 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    block_col: str | None = None,
-    size_blocking: bool = False,
 ) -> DataFrame:
     """Document pairs with n-gram Jaccard >= threshold.
 
-    Candidate generation, most to least scalable:
-    - ``size_blocking=True`` (the default scale path for the registered
-      query): docs are bucketed by floor(log2(|shingle set|)) and pairs form
-      only across EQUAL-OR-ADJACENT buckets. J(A,B) >= t bounds the size
-      ratio |B|/|A| by 1/t, so for t >= 0.5 the two floor-log2 buckets
-      differ by at most one — the blocking has EXACT recall while replacing
-      the cross join with an equi-join (the b side fans out 3x on bucket
-      keys; candidate count collapses from N^2/2 to same-size-class pairs).
-      The bucket is computed as length(bin(size)) — pure integer/string ops
-      that DuckDB reproduces exactly (no float log whose last-ulp could
-      flip a floor at bucket boundaries).
-    - ``block_col``: caller-provided equality blocking (language, domain);
-      recall limited to within-block pairs by construction.
-    - neither: exact all-pairs cross join — validation scale ONLY.
+    Candidates come from a shared-gram equi-join: each (doc, gram) row
+    joins the other docs' rows for the same gram, so only pairs that share
+    at least one shingle are ever materialized — sum(df^2) skinny rows
+    (~2.8M at sf0.1, max gram df 25) instead of N^2/2 per-pair array
+    intersections. A pair's joined-row count is |A∩B| because shingle
+    arrays are distinct-element, and J = c / (|A| + |B| - c) over those
+    integers. Exact for every threshold > 0: a qualifying pair has J > 0,
+    so it shares a gram. At scale a gram-df cap would bound hot-gram fan-out like the LSH
+    band caps.
 
     Docs with an empty shingle set are dropped before pairing (they carry
-    no n-gram evidence; all-pairs of empty docs would otherwise emit a
-    spurious O(N^2) clique of trivial 'duplicates').
+    no n-gram evidence).
     Output: (id_a, id_b, jaccard_sim), id_a < id_b.
     """
+    if threshold <= 0:
+        raise ValueError(f"ngram_jaccard_pairs: threshold must be > 0, got {threshold}")
     # tokens in their own projection (see shingles_from_tokens), shingles
     # persisted once for both join sides, and the empty-set filter applied
     # AFTER the eager cache so Catalyst can't push it (and the shingle
     # computation it references) below the repartition onto one partition.
     shingled = persist_tracked(
-        _ensure_parallelism(df.select(
-            F.col(id_col).alias("_id"),
-            *([F.col(block_col).alias("_blk")] if block_col else []),
-            F.col(text_col).alias("_text"),
-        ))
-        .select("_id", *(["_blk"] if block_col else []), tokens(F.col("_text")).alias("_toks"))
-        .select("_id", *(["_blk"] if block_col else []), shingles_from_tokens(F.col("_toks"), n).alias("_grams"))
+        _ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")))
+        .select("_id", tokens(F.col("_text")).alias("_toks"))
+        .select("_id", shingles_from_tokens(F.col("_toks"), n).alias("_grams"))
     )
     shingled.count()
     shingled = shingled.filter(F.size("_grams") > 0)
-    if size_blocking:
-        # r13: the size-blocked pair join is replaced by the SPARSE
-        # intersection count. The blocked join still enumerated every
-        # same-size-class pair and ran array_intersect per pair (~9.3M
-        # candidate pairs at sf0.1, each intersecting ~50-element string
-        # arrays — 12 s); the shared-gram equi-join materializes only pairs
-        # that share at least one shingle, sum(df^2) ~= 2.8M skinny rows at
-        # sf0.1 with max df 25 (measured — no hot-gram fan-out; at scale a
-        # df cap would bound it like the LSH band caps). Output-identical
-        # to the blocked join: a pair passes iff round4(J) >= t, which
-        # needs a shared gram, and |A∩B| equals the pair's gram-join row
-        # count because shingle arrays are distinct-element; J is then
-        # c/(na+nb-c) over the same integers the array_intersect form used,
-        # so the rounded values are bit-identical. The floor-log2 size
-        # blocking is implied, not lost: round4(J) >= t >= 0.6 forces a
-        # size ratio <= 1/0.59995 < 2, so both docs sit in equal-or-
-        # adjacent buckets — the blocking never excluded a qualifying pair.
-        # (At t near 0.5 the rounded filter admits ratios marginally above
-        # 2 that the bucket test could exclude, hence the guard.)
-        assert threshold >= 0.6, "sparse jaccard path proven only for t >= 0.6"
-        e = shingled.select(
-            F.col("_id"), F.size("_grams").alias("_n"), F.explode("_grams").alias("_g")
-        )
-        a = e.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "_g")
-        b = e.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "_g")
-        common = (
-            a.join(b, "_g")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "_na", "_nb")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        sim = F.col("_c") / F.greatest(
-            F.col("_na") + F.col("_nb") - F.col("_c"), F.lit(1)
-        )
-        return common.select(
-            "id_a",
-            "id_b",
-            portable_round(sim, 4).alias("jaccard_sim"),
-        ).filter(F.col("jaccard_sim") >= threshold)
-    elif block_col:
-        a = shingled.alias("a")
-        b = shingled.alias("b")
-        joined = a.join(b, on=F.col("a._blk") == F.col("b._blk")).filter(F.col("a._id") < F.col("b._id"))
-    else:
-        a = shingled.alias("a")
-        b = shingled.alias("b")
-        joined = a.crossJoin(b).filter(F.col("a._id") < F.col("b._id"))
-    sim = jaccard(F.col("a._grams"), F.col("b._grams"))
-    return (
-        joined.select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            portable_round(sim, 4).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
+    e = shingled.select(
+        F.col("_id"), F.size("_grams").alias("_n"), F.explode("_grams").alias("_g")
     )
+    a = e.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "_g")
+    b = e.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "_g")
+    common = (
+        a.join(b, "_g")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", "_na", "_nb")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
+    sim = F.col("_c") / F.greatest(F.col("_na") + F.col("_nb") - F.col("_c"), F.lit(1))
+    return common.select(
+        "id_a",
+        "id_b",
+        portable_round(sim, 4).alias("jaccard_sim"),
+    ).filter(F.col("jaccard_sim") >= threshold)
 
 
 # ---------------------------------------------------------------- MinHash-LSH

@@ -21,7 +21,6 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 import glob
-import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -2351,13 +2350,14 @@ def pipe_fingerprint_dedup(spark, sf_dir):
               GREATEST(len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)), 1) >= 0.8""",
 )
 def pipe_ngram_jaccard(spark, sf_dir):
-    """3-gram-shingle Jaccard near-dup pairs (threshold 0.8) with size
-    blocking: pairs form only across equal-or-adjacent floor-log2 shingle-
-    count buckets — exact recall at this threshold (J >= 0.5 bounds the
-    size ratio by 2) with an equi-join instead of the all-pairs cross join.
-    The oracle mirrors the same integer bucket (length(bin(n)))."""
+    """3-gram-shingle Jaccard near-dup pairs (threshold 0.8) from a
+    shared-gram equi-join: only pairs that share a shingle are counted, and
+    J comes from the shared-row count and the two set sizes. The oracle's
+    floor-log2 size-bucket filter (length(bin(n)), equal-or-adjacent) drops
+    no qualifying pair at this threshold: J >= 0.8 bounds the size ratio
+    below 2."""
     d = t(spark, sf_dir, "documents").select("doc_id", T.normalized_text(F.col("text")).alias("text"))
-    return D.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.8, size_blocking=True)
+    return D.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.8)
 
 
 @register(
@@ -3815,342 +3815,6 @@ def pipe_video_frames(spark, sf_dir):
         "frame_ts_ms",
         F.hex(F.col("frame_payload")).alias("frame_hex"),
     )
-
-
-# The driver's correctness gate checks the FIRST 50 entries of queries() in
-# dict order. Cumulative freshness after round 5: 176 of the 204 registry
-# entries have a green driver row (50 r5, 50 r4, 34 r3, 42 r1); the 28
-# entries with NO driver row yet (late round-5 additions, all green under
-# the local full-registry DuckDB mirror) take the head of this round's
-# window — after them, all 176 checked entries are cumulatively green and
-# the registry closes at 100% driver coverage. The remaining slots go to
-# (a) entries added this round, (b) entries whose code changed this round
-# after their last green row, and (c) the stalest r01-era cohort as pad
-# (computed, so adding a round-6 entry automatically displaces pad, never
-# a staged entry). Every entry outside the window stays under the local
-# full-registry pytest oracle (tests/test_oracle_parity.py).
-_ROUND6_STAGED = [
-    # -- the 28 round-5 session entries without a driver row ------------
-    "ext_recursive_hierarchy", "ext_window_range_frame", "ext_gaps_islands",
-    "ext_histogram", "pipe_zipf_slope", "stream_topk_per_window",
-    "pipe_dsir_resample", "pipe_tokenizer_fertility", "ext_snapshot_diff",
-    "pipe_eval_split_carve", "ext_asof_join_nearest", "pipe_containment_dups",
-    "pipe_emb_outliers", "ext_window_count_distinct", "pipe_lang_confusion",
-    "pipe_dataset_card", "stream_blocklist_filter", "ext_set_ops_all",
-    "ext_order_by_nulls", "pipe_ppl_bucket_filter", "stream_sliding_windows",
-    "pipe_pmi_collocations", "ext_any_all_quantified", "pipe_dup_cluster_sizes",
-    "pipe_lang_balance_weights", "pipe_curation_funnel", "pipe_rep_span_removal",
-    "pipe_entropy_rate",
-    # -- new this round -------------------------------------------------
-    "pipe_semdedup_hierarchical", "stream_dedup_index_upsert",
-    "pipe_knn_graph", "pipe_shard_assignment", "pipe_dedup_survivorship",
-    "ext_qualify", "ext_distinct_on", "pipe_ann_two_stage",
-    "pipe_sequence_packing", "pipe_mutual_knn", "pipe_moments_merge",
-    "ext_window_first_last", "pipe_ingest_anomaly", "pipe_token_gini",
-    "pipe_source_overlap", "pipe_label_centroid_sim", "pipe_charclass_audit",
-    "pipe_distinct_ngrams", "ext_window_dist_funcs",
-]
-
-# Entries whose code changed after their last green driver row: re-rowed on
-# the new binary even though the old row is green.
-# Round 8: pipe_sequence_packing's r02-r04 greens verified a definition
-# that a round-6 re-registration silently shadowed (the dead block is now
-# deleted and register() raises on duplicates) — the LIVE definition needs
-# its first driver row; pipe_dedup_method_agreement's compare-exchange
-# rewrite (volume_scaled_partitions) is round-7 code that must not wait
-# for the round-9 residue.
-# Round-8 re-rows, and why each:
-# - pipe_sequence_packing: its r02-r04 greens verified a definition that a
-#   round-6 re-registration silently shadowed; first driver row for the
-#   LIVE definition.
-# - pipe_dedup_method_agreement: round-7 compare-exchange rewrite, never
-#   driver-rowed (pulled forward from the residue per the r7 verdict).
-# - pipe_zorder_layout: round-8 re-chunk (global-order windows → two-level
-#   bucket chunking) CHANGES the output, so the old green row no longer
-#   covers the live values.
-# - pipe_basket_lift / pipe_kmeans_lloyd / pipe_semdedup_auto_k /
-#   pipe_ann_nprobe_sweep: round-8 code changes with bit-identical output
-#   (volume-scaled exchanges; the Arrow fold kernel, exact-equality pinned
-#   in tests/test_arrow_kernels.py) — re-rowed as the driver-verified
-#   representatives of the kernel swap. The remaining kernel-touched green
-#   entries (semdedup/knn/ANN family) keep their rows: the values those
-#   rows verified are unchanged to the bit, and all were re-simmed locally
-#   on the final tree this session.
-# Round-9 re-rows: the round-8 Arrow kernel swaps (strict-fold assignment,
-# fused PQ codes, batched LSH signatures) are bit-exact — exact-equality
-# pinned against the retained JVM twins in tests/test_arrow_kernels.py and
-# re-probed green on the final tree — but the round-8 window only had room
-# for four kernel-swap representatives (kmeans_lloyd, semdedup_auto_k,
-# ann_nprobe_sweep, plus link_prediction riding knn_graph). Round 9's
-# residue is 41 entries, leaving exactly 9 spare slots: spend them on the
-# kernel-touched green entries whose executed code changed most, chosen
-# for kernel-path coverage —
-# - pipe_ann_pq / pipe_pq_distortion: the fused pq_assign_codes kernel has
-#   NO driver row on the new code path otherwise (no PQ entry in the r8
-#   window).
-# - pipe_semdedup_hierarchical: the only ivf_assign_two_level caller.
-# - pipe_semdedup: the base ivf_assign + pair_cosine semdedup path.
-# - pipe_embedding_near_dup / _auto / pipe_embedding_dedup_lsh: the
-#   batched LSH-signature + pair_cosine near-dup stack.
-# - pipe_knn_graph / pipe_lsh_bucket_balance: the direct knn_graph and
-#   random_hyperplane_buckets callers.
-# (pipe_knn_label_purity / pipe_mutual_knn ride the same knn_graph path
-# already double-covered by link_prediction (r8) + pipe_knn_graph (r9).)
-_FORCE_REROW_SCHEDULE = {
-    8: [
-        "pipe_sequence_packing",
-        "pipe_dedup_method_agreement",
-        "pipe_zorder_layout",
-        "pipe_basket_lift",
-        "pipe_kmeans_lloyd",
-        "pipe_semdedup_auto_k",
-        "pipe_ann_nprobe_sweep",
-    ],
-    9: [
-        "pipe_ann_pq",
-        "pipe_pq_distortion",
-        "pipe_semdedup_hierarchical",
-        "pipe_semdedup",
-        "pipe_embedding_near_dup",
-        "pipe_embedding_near_dup_auto",
-        "pipe_embedding_dedup_lsh",
-        "pipe_knn_graph",
-        "pipe_lsh_bucket_balance",
-    ],
-    # Round-10 re-rows, staged during round 9 (the r9 window had zero
-    # spare slots — 41 residue + 9 kernel pins):
-    # - pipe_ann_ivf / pipe_ann_ivf_bucketed / pipe_mutual_knn: green rows
-    #   (r04/r05/r06) predate the round-8 Arrow kernel swap; named by the
-    #   r8 verdict as the round-10 window head.
-    # - pipe_ann_nprobe_sweep / pipe_ann_ndcg / pipe_ann_two_stage /
-    #   pipe_kmeans_lloyd / pipe_semdedup_auto_k /
-    #   pipe_silhouette_simplified: execute the round-9
-    #   codebook-collect guard (limit(max+1) plan change in
-    #   arrow_kernels._collect_codebook / similarity.pq_assign_codes) —
-    #   output-identical, re-rowed per the changed-code discipline. The
-    #   other guard-touched entries sit in the r9 window and get fresh
-    #   rows on the guarded code already.
-    # - the seven round-9 two-level order-statistic conversions
-    #   (_bucketed_running_sums/_bucketed_ntile): distributed plans,
-    #   outputs pinned oracle-equal, but their green rows predate the
-    #   rewrite (rfm's avg_monetary moved to exact-cents on BOTH sides).
-    # - round-10 additions (changed code this round): the six
-    #   knn_graph-dependent entries re-row on the exact-clone collapse
-    #   (bit-identical by pin, but the plan changed); the seven
-    #   order-stat entries above also cover the _range_bucket
-    #   double-cast (ADVICE r9) and the ANN entries the ivf_centroids
-    #   seed-rank routing.
-    10: [
-        "pipe_ann_ivf",
-        "pipe_ann_ivf_bucketed",
-        "pipe_mutual_knn",
-        "pipe_ann_nprobe_sweep",
-        "pipe_ann_ndcg",
-        "pipe_ann_two_stage",
-        "pipe_kmeans_lloyd",
-        "pipe_semdedup_auto_k",
-        "pipe_silhouette_simplified",
-        "pipe_mannwhitney_u",
-        "pipe_auc_roc",
-        "pipe_lift_deciles",
-        "pipe_ks_test",
-        "pipe_wasserstein_drift",
-        "pipe_rfm_segments",
-        "pipe_length_quality_hist",
-        "pipe_knn_graph",
-        "pipe_knn_label_purity",
-        "pipe_link_prediction",
-        "pipe_kcore_decompose",
-        "pipe_graph_assortativity",
-        # round-10 late: basket-size cap (plan + oracle in lockstep)
-        "pipe_basket_lift",
-    ],
-    # Round-11 re-rows: the knn_graph probe fold (similarity.py — the
-    # persist materialization count() folded into the flood-trigger
-    # groupBy probe; outputs pinned identical, job structure changed)
-    # re-rows the kNN-family callers on the folded code.
-    11: [
-        "pipe_knn_graph",
-        "pipe_mutual_knn",
-        "pipe_knn_label_purity",
-        "pipe_link_prediction",
-        "pipe_kcore_decompose",
-        "pipe_graph_assortativity",
-    ],
-}
-# A round's pins activate only when that round is the NEXT driver round
-# (the smallest scheduled round still ahead of the newest CORRECTNESS
-# file): round-9 pins must not consume round-8 slots, and once the driver
-# has verified the round carrying the changed code the pins expire (the
-# self-staging ordering then treats the entries like any other green
-# entry).
-
-
-def _repo_root() -> str:
-    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _correctness_rows() -> dict[int, dict]:
-    """round number -> parsed row dict, for every parseable repo-root
-    CORRECTNESS_r*.json. Unparseable or non-dict files contribute nothing
-    (fresh checkout / truncated artifact tolerance)."""
-    out: dict[int, dict] = {}
-    for path in glob.glob(os.path.join(_repo_root(), "CORRECTNESS_r*.json")):
-        stem = os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")]
-        try:
-            rnd = int(stem)
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            out[rnd] = rows
-    return out
-
-
-def _latest_driver_round() -> int:
-    return max(_correctness_rows(), default=0)
-
-
-def _active_force_rerow() -> list[str]:
-    latest = _latest_driver_round()
-    pending = [r for r in _FORCE_REROW_SCHEDULE if r > latest]
-    if not pending:
-        return []
-    return _FORCE_REROW_SCHEDULE[min(pending)]
-
-# Round-7 staging head (this round's window was already full at 50): the
-# late-round-6 additions below are locally oracle-green (vanilla-session
-# sims at sf0.01) but have no driver row yet — they take the head of the
-# NEXT round's window, same discipline as round 6 inherited the 28
-# round-5 entries. Listed here so the restage is a copy, not a hunt:
-#   pipe_graph_pagerank, pipe_join_skew_audit, pipe_event_transitions,
-#   pipe_graph_degree_dist, ext_nth_value_window, pipe_ann_nprobe_sweep,
-#   pipe_fk_integrity, stream_event_transitions, pipe_emb_norm_audit,
-#   pipe_length_quality_hist, ext_yoy_growth, pipe_source_dup_matrix,
-#   pipe_centroid_drift, pipe_kcenter_coreset, pipe_lsh_bucket_balance,
-#   pipe_pq_distortion, pipe_knn_label_purity, pipe_jaccard_threshold_sweep,
-#   pipe_hub_impact, pipe_maxsim_late_interaction, pipe_rrf_fusion,
-#   pipe_mmr_diversify, pipe_ann_ndcg, pipe_editdist_dedup,
-#   pipe_dup_transitivity, pipe_dedup_mixture_shift, pipe_events_autocorr,
-#   pipe_basket_lift, pipe_rfm_segments, pipe_winsorized_stats,
-#   pipe_purchase_attribution, stream_purchase_attribution,
-#   pipe_cov_spectrum, pipe_zorder_layout, pipe_delete_cascade_audit,
-#   ext_limit_offset, pipe_partitioned_write_prune,
-#   pipe_approx_quantile_audit, pipe_traffic_heatmap,
-#   pipe_conversion_latency, pipe_schema_evolution,
-#   pipe_bucketed_join_audit, pipe_sparse_cosine_dups, pipe_kmeans_lloyd, pipe_ewma_anomaly,
-#   pipe_cusum_changepoint, pipe_dq_expectations, pipe_js_source_divergence,
-#   pipe_record_linkage, pipe_welch_ttest, pipe_ks_test, pipe_corr_matrix,
-#   pipe_bootstrap_ci, pipe_ols_two_feature, stream_ewma_monitor,
-#   pipe_chi2_association, pipe_permutation_test, pipe_mannwhitney_u,
-#   pipe_freshness_decay, pipe_seasonal_decompose, pipe_feature_hashing,
-#   pipe_wasserstein_drift, pipe_benford_audit, pipe_forecast_backtest,
-#   pipe_sax_motifs, pipe_auc_roc, pipe_pairwise_ttest,
-#   pipe_calibration_ece, pipe_classifier_metrics, pipe_psi_drift,
-#   pipe_cohort_retention, pipe_lift_deciles, pipe_kanonymity_audit,
-#   pipe_cohen_kappa, pipe_mad_outliers, pipe_naive_bayes,
-#   pipe_decision_stump, pipe_eb_shrinkage, pipe_kaplan_meier,
-#   pipe_theil_sen, pipe_ab_srm_check, pipe_logreg_gd,
-#   pipe_lpa_communities, pipe_jl_projection, stream_late_data_drop,
-#   pipe_kfold_cv, pipe_power_analysis, pipe_link_prediction,
-#   pipe_anova_oneway, pipe_centroid_classifier, pipe_bpe_merge_train,
-#   pipe_diff_in_diff, pipe_mutual_info_rank, pipe_target_encoding,
-#   pipe_kcore_decompose, pipe_seq_trigrams, pipe_silhouette_simplified,
-#   pipe_overdispersion_check, pipe_graph_assortativity,
-#   pipe_watermark_budget, pipe_reshard_audit, pipe_heaps_law,
-#   pipe_shapley_attribution, pipe_retention_ttl_sizing,
-#   pipe_join_size_estimate, pipe_embedding_drift_mmd,
-#   pipe_vocab_prune_curve, pipe_simpson_audit, pipe_hill_tail_index,
-#   pipe_dp_count_noise, pipe_ratio_metric_ab,
-#   stream_min_watermark_union, pipe_uplift_segments,
-#   pipe_cuped_adjustment, pipe_dedup_method_agreement,
-#   pipe_topk_stability, pipe_bradley_terry, pipe_fleiss_kappa,
-#   pipe_sinkhorn_ot, pipe_token_budget_mix, pipe_log_odds_terms,
-#   pipe_conformal_interval, pipe_skipgram_pairs,
-#   pipe_shard_coverage_curve, pipe_quantile_normalize,
-#   ext_variant_semistructured, pipe_observed_funnel_metrics,
-#   stream_variant_telemetry, pipe_class_balance_reweight,
-#   pipe_slo_burn_rate, pipe_ldiversity_audit, pipe_group_sequential_test,
-#   pipe_cem_att
-# (plus any added after this comment; see SURVEY.md round-6 session log.)
-# NOTE round 7+: the hand-maintained staging above is now a fallback —
-# _ordered_names() reads CORRECTNESS_r*.json and puts entries without a
-# green driver row first automatically (see _driver_green_names).
-
-_WINDOW_SIZE = 50
-
-
-def _green_rounds() -> dict[str, int]:
-    """name -> LATEST driver round with a green row for that entry.
-
-    The driver verifies only the first ``_WINDOW_SIZE`` entries of
-    ``queries()`` per round, so ordering IS the coverage budget.  Reading
-    the driver's own artifacts makes the window self-staging: entries that
-    already have a green row yield their slot to unchecked ones without a
-    hand-maintained list each round.  A full-oracle row is green when the
-    value hash matched; a rows-only row (no oracle) when the row count
-    matched.  Missing or unparseable files (fresh checkout) contribute
-    nothing — the static staging lists below still apply.
-    """
-    latest: dict[str, int] = {}
-    for rnd, rows in _correctness_rows().items():
-        for name, row in rows.items():
-            if not isinstance(row, dict) or row.get("err"):
-                continue
-            hash_ok = row.get("hash_match")
-            if hash_ok or (hash_ok is None and row.get("rows_match")):
-                if rnd > latest.get(name, 0):
-                    latest[name] = rnd
-    return latest
-
-
-def _driver_green_names() -> set[str]:
-    return set(_green_rounds())
-
-
-def _stalest_pad() -> list[str]:
-    """Green entries ordered stalest-first: ascending latest-green round,
-    ties broken by registry insertion order.
-
-    Era-invariant by construction (r10 verdict item 1: the previous
-    static cohort list went stale every time a new CORRECTNESS file
-    re-greened entries): when round N's file lands, its re-rowed entries
-    get latest-green = N and sink to the tail of the pad automatically,
-    so the freshest-possible stalest-first order holds in every era
-    without a hand-maintained list.
-    """
-    rounds = _green_rounds()
-    order = {n: i for i, n in enumerate(QUERIES)}
-    return sorted(
-        (n for n in rounds if n in QUERIES),
-        key=lambda n: (rounds[n], order[n]),
-    )
-
-
-def _ordered_names() -> list[str]:
-    green = _driver_green_names()
-    head = [n for n in _ROUND6_STAGED if n in QUERIES and n not in green]
-    head += [n for n in _active_force_rerow() if n in QUERIES and n not in head]
-    in_head = set(head)
-    unchecked = [n for n in QUERIES if n not in green and n not in in_head]
-    pad = [n for n in _stalest_pad() if n not in in_head]
-    fill = unchecked + [n for n in pad if n not in set(unchecked)]
-    window = head + fill[: max(0, _WINDOW_SIZE - len(head))]
-    seen = set(window)
-    return window + [n for n in QUERIES if n not in seen]
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].build for name in _ordered_names()}
-
-
-def all_oracles() -> dict[str, str]:
-    return {
-        name: QUERIES[name].oracle
-        for name in _ordered_names()
-        if QUERIES[name].oracle is not None
-    }
 
 
 # =====================================================================

@@ -1880,13 +1880,12 @@ def test_incremental_dedup_empty_shard_and_empty_index(spark):
     assert got == {1: "unique", 2: "dup_within_shard", 3: "unique"}
 
 
-def test_ngram_jaccard_sparse_equals_blocked_join(spark):
-    """The r13 sparse intersection-count path (shared-gram equi-join +
-    pair count) must reproduce the blocked pair join it replaced: same
+@pytest.mark.parametrize("threshold", [0.5, 0.8])
+def test_ngram_jaccard_sparse_equals_all_pairs(spark, threshold):
+    """The shared-gram path (equi-join on grams + pair count) must
+    reproduce a plain all-pairs cross join with no bucket filter: same
     pairs, bit-identical rounded similarities, on a corpus with exact
     dups, near-dups, disjoint docs, and sub-n short docs."""
-    from pyspark.sql import functions as F
-
     from sql_query_engine_rs_spark.functions.dedup import (
         jaccard,
         ngram_jaccard_pairs,
@@ -1902,35 +1901,40 @@ def test_ngram_jaccard_sparse_equals_blocked_join(spark):
         (3, "completely different words entirely here now"),
         (4, "xy zz"),  # < n tokens -> empty shingle set, must not pair
         (5, "the quick brown fox jumps over the lazy cat today"),
+        (6, "the quick brown fox jumps"),  # subset, size ratio > 2
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = sorted(
-        map(tuple, ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.8, size_blocking=True).collect())
+        map(tuple, ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=threshold).collect())
     )
-    # reference: the pre-r13 blocked-join formulation, verbatim
     g = df.select(
         F.col("doc_id").alias("_id"),
         shingles_from_tokens(tokens(F.col("text")), 3).alias("_grams"),
-    ).filter(F.size("_grams") > 0).withColumn("_blk", F.length(F.bin(F.size("_grams"))))
+    ).filter(F.size("_grams") > 0)
     a, b = g.alias("a"), g.alias("b")
     ref = sorted(
         map(
             tuple,
             a.crossJoin(b)
-            .filter(
-                (F.col("a._id") < F.col("b._id"))
-                & (F.abs(F.col("a._blk") - F.col("b._blk")) <= 1)
-            )
+            .filter(F.col("a._id") < F.col("b._id"))
             .select(
                 F.col("a._id").alias("id_a"),
                 F.col("b._id").alias("id_b"),
                 portable_round(jaccard(F.col("a._grams"), F.col("b._grams")), 4).alias("jaccard_sim"),
             )
-            .filter(F.col("jaccard_sim") >= 0.8)
+            .filter(F.col("jaccard_sim") >= threshold)
             .collect(),
         )
     )
     assert got == ref and any(r[:2] == (0, 1) for r in got), (got, ref)
+    if threshold < 0.8:
+        assert any(r[2] < 0.8 for r in got), got
+
+
+def test_ngram_jaccard_rejects_nonpositive_threshold(spark):
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="threshold must be > 0"):
+        D.ngram_jaccard_pairs(df, threshold=0)
 
 
 def test_winnow_dups_barriers_and_planted_pair(spark, tmp_path):

@@ -612,16 +612,21 @@ def test_aqe_skew_join_split_recipe(spark, sf_dir):
         _restore_confs(spark, prior)
 
 
-def test_bench_set_is_registered(spark, sf_dir):
-    """Every bench.py headline query must exist in the registry — a rename
-    or registry refactor must not silently shrink the measured set."""
+def test_bench_set_is_registered(spark, sf_dir, tmp_path, monkeypatch):
+    """Every legacy-256 bench name must exist in the registry — a rename
+    or registry refactor must not silently shrink the comparable total —
+    and a missing legacy stamp is a clear error, never an empty set."""
     import bench
 
     from sql_query_engine_rs_spark.queries import QUERIES as REG
 
-    missing = [n for n in bench.BENCH_QUERIES if n not in REG]
-    assert not missing, f"bench queries not registered: {missing}"
-    assert len(set(bench.BENCH_QUERIES)) == len(bench.BENCH_QUERIES), "duplicate bench entries"
+    legacy = bench._legacy_bench_queries()
+    assert len(set(legacy)) == 256
+    missing = [n for n in legacy if n not in REG]
+    assert not missing, f"legacy bench queries not registered: {missing}"
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    with pytest.raises(SystemExit, match="cannot read the legacy query set"):
+        bench._legacy_bench_queries()
 
 
 def test_bench_stdout_line_stays_driver_safe():
@@ -651,9 +656,10 @@ def test_bench_stdout_line_stays_driver_safe():
     assert parsed["total_raw"] == 123.456
     assert parsed["noise_ratio_median"] == 1.001
     assert parsed["retried"] == 3
-    assert parsed["n_queries"] == len(bench.LEGACY_BENCH_QUERIES)
+    assert parsed["n_queries"] == len(bench._legacy_bench_queries())
     assert parsed["n_queries_full"] == len(bench.BENCH_QUERIES)
     assert parsed["value_full"] > parsed["value"]
+    assert parsed["cpus"] == int(bench.CPUS)
 
 
 def test_knn_graph_candidates_never_exchange_vectors(spark, sf_dir):
@@ -1065,13 +1071,25 @@ def test_bench_burst_suspects_selection():
     assert len(bench._burst_suspects(many, {k: 1.0 for k in many}, cap=16)) == 16
 
 
-def test_bench_latest_committed_map_reads_newest_round():
+def test_bench_latest_committed_map_reads_newest_round(tmp_path, monkeypatch):
+    """Only stamps taken at this run's cpus are a noise/burst reference:
+    the newest same-cpus stamp is read, a stamp with no cpus or other cpus
+    is skipped even when newer."""
+    import json as _json
+
     import bench
 
-    m = bench._latest_committed_query_map()
-    assert m and all(isinstance(v, float) for v in m.values())
-    # the committed r10 stamp is the newest on this tree
-    assert "pipe_basket_lift" in m
+    def stamp(rnd, q, **extra):
+        path = tmp_path / f"BENCH_QUERIES_r{rnd:02d}.json"
+        path.write_text(_json.dumps({"queries": {q: 1.5}, **extra}))
+
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    monkeypatch.setattr(bench, "CPUS", "4")
+    stamp(1, "old_same_cpus", cpus=4)
+    stamp(2, "same_cpus", cpus=4)
+    stamp(3, "no_cpus")
+    stamp(4, "other_cpus", cpus=32)
+    assert bench._latest_committed_query_map() == {"same_cpus": 1.5}
 
 
 def _ancestors_to_root(plan: str, needle: str) -> list[str]:

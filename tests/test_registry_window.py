@@ -1,50 +1,41 @@
 """The driver verifies only the first 50 ``queries()`` entries per round, so
 ordering IS the correctness-coverage budget.  These pins keep the window
-self-staging: slots go to entries without a green CORRECTNESS row, green
-entries fall to the tail, and deliberate re-rows stay explicit."""
+self-staging: slots go to entries without a green CORRECTNESS row and green
+entries pad the rest stalest-first."""
 
 from __future__ import annotations
 
-from sql_query_engine_rs_spark.queries import (
-    _FORCE_REROW_SCHEDULE,
-    _WINDOW_SIZE,
-    _active_force_rerow,
-    _driver_green_names,
-    _latest_driver_round,
-    _ordered_names,
-    QUERIES,
-)
+import __spark_entry__ as m
+from __spark_entry__ import _WINDOW_SIZE, _green_rounds, _ordered_names
+from sql_query_engine_rs_spark.queries import QUERIES
 
 
 def _assert_window_invariants():
     """The era-invariant window contract (r10 verdict item 1).
 
     While unchecked entries remain, no window slot may go to an
-    already-green entry outside the force-rerow list.  Once the registry
-    is fully driver-green (residue zero), the leftover slots pad with
-    green entries STALEST-FIRST — asserted as a property of the per-entry
-    latest-green-round map (not against a static cohort list, which went
-    stale at grading time two rounds running: every new CORRECTNESS file
-    re-greens entries and reshuffles the true staleness order)."""
-    from sql_query_engine_rs_spark.queries import _green_rounds
-
+    already-green entry.  Once the registry is fully driver-green (residue
+    zero), the leftover slots pad with green entries STALEST-FIRST —
+    asserted as a property of the per-entry latest-green-round map (not
+    against a static cohort list, which went stale at grading time two
+    rounds running: every new CORRECTNESS file re-greens entries and
+    reshuffles the true staleness order)."""
     rounds = _green_rounds()
     green = set(rounds)
     window = _ordered_names()[:_WINDOW_SIZE]
-    pins = set(_active_force_rerow())
-    residue = [n for n in QUERIES if n not in green and n not in pins]
+    residue = [n for n in QUERIES if n not in green]
     outside_unchecked = [n for n in residue if n not in set(window)]
     if outside_unchecked:
-        # an unchecked entry was displaced: no green non-pin may hold a slot
-        wasted = [n for n in window if n in green and n not in pins]
+        # an unchecked entry was displaced: no green entry may hold a slot
+        wasted = [n for n in window if n in green]
         assert not wasted, f"green entries occupying window slots: {wasted}"
         return
     # every unchecked entry is in the window; leftover slots pad with GREEN
     # entries stalest-first
-    pad = [n for n in window if n not in pins and n in green]
+    pad = [n for n in window if n in green]
     # 1. pad entries are green (residue zero => everything is) and sorted
     #    stalest-first within the pad itself;
-    pad_rounds = [rounds[n] for n in pad if n in rounds]
+    pad_rounds = [rounds[n] for n in pad]
     assert pad_rounds == sorted(pad_rounds), (
         f"pad not stalest-first: {list(zip(pad, pad_rounds))[:8]}..."
     )
@@ -66,25 +57,24 @@ def test_window_invariants_survive_next_round_file_landing(tmp_path, monkeypatch
     event that broke the static-cohort assertion at r9 and r10 grading
     time): copy the real artifacts, add a synthetic r{latest+1} that
     greens the current window, and re-assert every window invariant."""
+    import glob
     import json
+    import os
     import shutil
 
-    import sql_query_engine_rs_spark.queries as q
-
-    real_root = q._repo_root()
-    for path in q.glob.glob(q.os.path.join(real_root, "CORRECTNESS_r*.json")):
-        shutil.copy(path, tmp_path / q.os.path.basename(path))
-    latest = q._latest_driver_round()
+    for path in glob.glob(os.path.join(m._ROOT, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path / os.path.basename(path))
+    latest = max(m._correctness_rows(), default=0)
     fake = {
         name: {"rows_match": True, "schema_match": True,
                "hash_match": True, "err": None}
         for name in _ordered_names()[:_WINDOW_SIZE]
     }
     (tmp_path / f"CORRECTNESS_r{latest + 1:02d}.json").write_text(json.dumps(fake))
-    monkeypatch.setattr(q, "_repo_root", lambda: str(tmp_path))
-    assert q._latest_driver_round() == latest + 1
+    monkeypatch.setattr(m, "_ROOT", str(tmp_path))
+    assert max(m._correctness_rows()) == latest + 1
     # the just-greened entries must sink to the pad tail, not lead it
-    rounds = q._green_rounds()
+    rounds = _green_rounds()
     for name in fake:
         assert rounds[name] == latest + 1
     _assert_window_invariants()
@@ -93,41 +83,10 @@ def test_window_invariants_survive_next_round_file_landing(tmp_path, monkeypatch
 
 
 def test_window_is_full_while_unchecked_entries_remain():
-    green = _driver_green_names()
+    green = set(_green_rounds())
     unchecked = [n for n in QUERIES if n not in green]
     window = _ordered_names()[:_WINDOW_SIZE]
-    expected = min(_WINDOW_SIZE, len(unchecked) + len(_active_force_rerow()))
-    assert len(window) >= expected
-
-
-def test_force_rerow_activates_only_the_next_scheduled_round():
-    """A round's pins occupy slots only while that round is the next one
-    the driver will verify: later rounds' pins must not consume earlier
-    slots, and verified rounds' pins must expire."""
-    latest = _latest_driver_round()
-    pending = [r for r in _FORCE_REROW_SCHEDULE if r > latest]
-    if pending:
-        assert _active_force_rerow() == _FORCE_REROW_SCHEDULE[min(pending)]
-    else:
-        assert _active_force_rerow() == []
-
-
-def test_force_rerow_schedule_names_exist():
-    for rnd, names in _FORCE_REROW_SCHEDULE.items():
-        missing = [n for n in names if n not in QUERIES]
-        assert not missing, f"round {rnd} pins not in registry: {missing}"
-
-
-def test_round9_window_fits_residue_plus_pins():
-    """Round 9 must drain the full no-driver-row residue: the 9 re-row
-    pins may not push any never-checked entry out of the 50-slot window."""
-    green = _driver_green_names()
-    window8 = set(_ordered_names()[:_WINDOW_SIZE])
-    residue = [n for n in QUERIES if n not in green and n not in window8]
-    assert len(residue) + len(_FORCE_REROW_SCHEDULE[9]) <= _WINDOW_SIZE, (
-        f"{len(residue)} residue + {len(_FORCE_REROW_SCHEDULE[9])} pins "
-        f"exceed the {_WINDOW_SIZE}-slot window"
-    )
+    assert len(window) >= min(_WINDOW_SIZE, len(unchecked))
 
 
 def test_ordering_is_a_permutation_of_the_registry():
@@ -138,14 +97,12 @@ def test_ordering_is_a_permutation_of_the_registry():
 
 def test_green_parser_tolerates_missing_files(tmp_path, monkeypatch):
     """A fresh checkout (no CORRECTNESS artifacts) must not break ordering."""
-    import sql_query_engine_rs_spark.queries as q
-
-    monkeypatch.setattr(q, "_repo_root", lambda: str(tmp_path))
-    assert q._driver_green_names() == set()
-    assert q._stalest_pad() == []
-    assert q._latest_driver_round() == 0
-    names = q._ordered_names()
-    assert len(names) == len(set(names)) == len(q.QUERIES)
+    monkeypatch.setattr(m, "_ROOT", str(tmp_path))
+    assert m._correctness_rows() == {}
+    assert _green_rounds() == {}
+    assert m._stalest_pad() == []
+    names = _ordered_names()
+    assert names == list(QUERIES)
 
 
 def test_register_raises_on_duplicate_name():
