@@ -22,7 +22,11 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,28 +77,22 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return parquet_scan(spark, f"{sf_dir}/{name}.parquet")
 
 
-def _set_confs(spark: SparkSession, confs: dict[str, str]) -> dict[str, str | None]:
-    """Set session confs, returning the prior values for ``_restore_confs``.
-
-    The streaming queries need runtime confs (nanosAsLong, UTC tz) only for
-    the duration of their eager drain; leaving them set would leak into
-    whatever query the session runs next."""
-    prior: dict[str, str | None] = {}
-    for k, v in confs.items():
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-        spark.conf.set(k, v)
-    return prior
-
-
-def _restore_confs(spark: SparkSession, prior: dict[str, str | None]) -> None:
-    for k, v in prior.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
+@contextmanager
+def _scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the duration of the block, then put the prior
+    values back (unsetting keys that were unset), so a builder's runtime
+    confs never leak into whatever query the session runs next."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
             spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -125,6 +123,158 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = parquet_scan(spark, f"{sf_dir}/events.parquet")
     return _normalize_events_ts(df)
+
+
+# Every stream_ entry drains under this one conf set. nanosAsLong and UTC
+# make the events scan and its timestamp rendering match the DuckDB oracle
+# (see events_table). The shuffle-partition count sizes the state stores to
+# the bounded drain rather than to the batch conf: each stateful-operator
+# partition carries a state store (open + commit + checkpoint per
+# micro-batch), a per-partition fixed cost that dwarfs row work on a
+# bounded drain (32 -> 8 partitions halves wall time at sf0.1). An
+# always-on deployment sizes it to key cardinality x arrival rate instead.
+_STREAM_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": "8",
+}
+
+
+@contextmanager
+def _stream_scope(spark: SparkSession):
+    """The scope every ``stream_`` builder drains in: ``_STREAM_CONFS`` set
+    and restored on exit, and one temp root (yielded) for stream sources,
+    sink tables and checkpoints, removed on exit. Whatever the builder
+    returns must be materialized before the block ends (see ``_drain``)."""
+    root = tempfile.mkdtemp(prefix="stream_")
+    try:
+        with _scoped_confs(spark, _STREAM_CONFS):
+            yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _single_batch_stream_dir(sf_dir: str, root: str) -> str:
+    """Materialize events.parquet as a 1-file stream source directory
+    under ``root`` (FileStreamSource requires a DIRECTORY; the file is
+    symlinked, zero copy).
+
+    The batch-DISTINCT oracle for ``stream_dedup`` holds ONLY when the whole
+    source drains in one micro-batch: across batches the watermark advances
+    and dropDuplicatesWithinWatermark may re-emit expired keys. One file +
+    availableNow + no maxFilesPerTrigger pins single-batch execution; the
+    assertion makes the contract loud if the fixture ever changes.
+    """
+    stream_dir = tempfile.mkdtemp(prefix="events_", dir=root)
+    os.symlink(
+        os.path.abspath(f"{sf_dir}/events.parquet"),
+        os.path.join(stream_dir, "events.parquet"),
+    )
+    n_files = len(glob.glob(os.path.join(stream_dir, "*.parquet")))
+    assert n_files == 1, f"single-batch stream contract broken: {n_files} files"
+    return stream_dir
+
+
+def _sentineled_stream_dir(sf_dir: str, root: str) -> str:
+    """events.parquet as a stream dir under ``root`` PLUS a sentinel file
+    holding one click and one purchase at max(ts) + 2 days (event_id −1/−2,
+    user_id −1).
+
+    A stream-stream OUTER join emits an unmatched row only when the
+    watermark proves no match can still arrive; on a bounded drain the
+    watermark stops at max(ts) − delay, so rows near the end would stay
+    undecided forever. The sentinel pushes the final watermark 2 days past
+    every real row, and Spark's no-data micro-batch then flushes ALL real
+    outer results before availableNow terminates. Sentinel rows are
+    filtered from the registered output (negative ids); the sentinel file
+    is written with the source parquet's EXACT arrow schema so the stream
+    schema (incl. the nanos/micros ts generation) stays uniform.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stream_dir = tempfile.mkdtemp(prefix="events_", dir=root)
+    src = os.path.abspath(f"{sf_dir}/events.parquet")
+    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
+    tbl = pq.read_table(src)
+    pdf = tbl.slice(0, 2).to_pandas()
+    max_ts = tbl.column("ts").to_pandas().max()
+    pdf["event_id"] = [-1, -2]
+    pdf["user_id"] = [-1, -1]
+    pdf["event_type"] = ["click", "purchase"]
+    pdf["ts"] = [max_ts + pd.Timedelta(days=2)] * 2
+    pq.write_table(
+        pa.Table.from_pandas(pdf, schema=tbl.schema, preserve_index=False),
+        os.path.join(stream_dir, "zz_sentinel.parquet"),
+    )
+    return stream_dir
+
+
+def _events_stream(
+    spark: SparkSession, sf_dir: str, root: str, *, sentinels: bool = False
+) -> DataFrame:
+    """events.parquet as a normalized-``ts`` stream over a stream dir under
+    ``root``: the single-batch layout, or with ``sentinels`` the
+    sentinel-extended one. The static scan supplies the stream's schema."""
+    static = parquet_scan(spark, f"{sf_dir}/events.parquet")
+    layout = _sentineled_stream_dir if sentinels else _single_batch_stream_dir
+    return _normalize_events_ts(
+        spark.readStream.schema(static.schema).parquet(layout(sf_dir, root))
+    )
+
+
+def _sharded_stream(spark: SparkSession, sf_dir: str, table: str, root: str) -> DataFrame:
+    """``<table>.parquet`` as a stream that drains in THREE micro-batches:
+    the rows are split into three source files under ``root`` and read with
+    ``maxFilesPerTrigger=1``."""
+    import pyarrow.parquet as pq_arrow
+
+    src_dir = tempfile.mkdtemp(prefix=f"{table}_src_", dir=root)
+    tbl = pq_arrow.read_table(f"{sf_dir}/{table}.parquet")
+    step = (tbl.num_rows + 2) // 3
+    for i in range(3):
+        pq_arrow.write_table(
+            tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
+        )
+    static = parquet_scan(spark, f"{sf_dir}/{table}.parquet")
+    return (
+        spark.readStream.schema(static.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+
+
+def _drain(
+    out: DataFrame,
+    mode: str,
+    finish: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Drain a streaming frame with ``availableNow`` into a memory sink and
+    return the sink table (after ``finish``, if given) materialized with
+    ``localCheckpoint(eager=True)``.
+
+    The sink gets a unique ``stream_sink_<uuid>`` name and its view is
+    dropped on the way out, even if the drain or the checkpoint raises: in
+    a long session each drain would otherwise stay pinned in driver memory
+    under that name. The eager checkpoint locks in the string rendering of
+    any timestamp while ``_stream_scope``'s UTC zone is still set, and
+    frees the result from the scope's temp files."""
+    spark = out.sparkSession
+    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
+    try:
+        (
+            out.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        drained = spark.table(sink)
+        return (finish(drained) if finish else drained).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4533,58 +4683,17 @@ def stream_windowed_counts(spark, sf_dir):
     the events parquet -> watermark -> tumbling window -> availableNow drain
     into a memory sink. Same result (and same oracle) as the batch twin
     ext_events_window — the unified batch/streaming contract, verified by
-    the driver itself.
-
-    Conf note: nanosAsLong is restored after the drain (the scan is done).
-    The result is materialized eagerly (localCheckpoint) while the UTC tz
-    is in effect, locking in the string rendering of the window timestamp,
-    and the memory-sink view is dropped so drained results don't accumulate
-    in driver memory across a long session."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        # FileStreamSource requires a DIRECTORY; expose the single parquet
-        # file through a temp dir symlink (zero copy).
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_stream_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+    the driver itself."""
+    with _stream_scope(spark) as root:
+        out = windowed_counts(
+            _events_stream(spark, sf_dir, root), "1 hour", watermark="2 hours"
         )
-        out = windowed_counts(stream, "1 hour", watermark="2 hours")
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        # Materialize the drained result off the memory sink, then drop the
-        # sink view: in a long session each drain would otherwise stay
-        # pinned in driver memory under its stream_sink_<uuid> name. The
-        # eager localCheckpoint also locks in the UTC string rendering of
-        # the window timestamp while the scoped tz conf is still set.
-        result = (
-            spark.table(sink)
-            .select(
-                F.col("window_start").cast("string").alias("window_start"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "complete", lambda sink: sink.select(
+            F.col("window_start").cast("string").alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        ))
 
 
 # =====================================================================
@@ -6102,44 +6211,22 @@ def stream_interval_join(spark, sf_dir):
     user + [ts, ts+10min], availableNow-drained to a memory sink. The
     time-range bound is what lets Spark expire join state — the property
     that keeps an always-on join's state finite. Same DuckDB oracle as the
-    batch twin (plain range-predicate self-join). Runtime confs are scoped
-    to the drain (output columns are longs/strings — nothing lazily
-    tz-dependent)."""
-    import uuid
-
+    batch twin (plain range-predicate self-join)."""
     from sql_query_engine_rs_spark.streaming import interval_join
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # State partition count is sized to the stream, not the batch conf:
-        # each stateful-operator partition carries a state store (open +
-        # commit + checkpoint per micro-batch), a per-partition fixed cost
-        # that dwarfs row work on a bounded drain (32 -> 8 partitions halves
-        # wall time at sf0.1). An always-on deployment sizes this to key
-        # cardinality x arrival rate instead. Scoped: restored post-drain.
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_sj_")
-
-        def src():
-            return _normalize_events_ts(
-                spark.readStream.schema(static.schema).parquet(stream_dir)
-            )
-
+    with _stream_scope(spark) as root:
+        events = _events_stream(spark, sf_dir, root)
         # project to the join's inputs before the stream-stream join: every
         # buffered row sits in FOUR state stores per partition until the
         # watermark expires it, so unneeded columns (props, value,
         # event_type) would be paid per-row in state bytes and in the
         # shuffle feeding it (guide §2.3/§5)
         clicks = (
-            src().filter(F.col("event_type") == "click")
+            events.filter(F.col("event_type") == "click")
             .select("event_id", "user_id", "ts")
         )
         purchases = (
-            src().filter(F.col("event_type") == "purchase")
+            events.filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts")
         )
         joined = interval_join(clicks, purchases, key_col="user_id", upper="10 minutes")
@@ -6149,21 +6236,7 @@ def stream_interval_join(spark, sf_dir):
             "user_id",
             (F.unix_timestamp("r_ts") - F.unix_timestamp("l_ts")).alias("lag_sec"),
         )
-        sink = f"stream_sj_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "append")
 
 
 @register(
@@ -6178,44 +6251,16 @@ def stream_dedup(spark, sf_dir):
     the watermark passes them, unlike plain dropDuplicates whose state grows
     without bound. Single-batch execution is pinned (one source file,
     availableNow, no maxFilesPerTrigger — see _single_batch_stream_dir), so
-    the result equals batch DISTINCT, which is the oracle. Runtime confs are
-    scoped to the drain: the output holds no timestamp columns, so nothing
-    lazily depends on them afterward."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_dd_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    the result equals batch DISTINCT, which is the oracle."""
+    with _stream_scope(spark) as root:
         deduped = (
-            stream.select("user_id", "event_type", "ts")
+            _events_stream(spark, sf_dir, root)
+            .select("user_id", "event_type", "ts")
             .withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
             .select("user_id", "event_type")
         )
-        sink = f"stream_dd_{uuid.uuid4().hex[:8]}"
-        (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(deduped, "append")
 
 
 @register(
@@ -6240,41 +6285,14 @@ def stream_event_transitions(spark, sf_dir):
     the always-on deployment maintains the corpus transition matrix
     incrementally with O(users) state instead of recomputing the window
     over all history each time."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import transition_counts_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_tr_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
-        deltas = transition_counts_stateful(stream)
-        sink = f"stream_tr_{uuid.uuid4().hex[:8]}"
-        (
-            deltas.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("from_type", "to_type")
+    with _stream_scope(spark) as root:
+        deltas = transition_counts_stateful(_events_stream(spark, sf_dir, root))
+        return _drain(deltas, "update", lambda sink: (
+            sink.groupBy("from_type", "to_type")
             .agg(F.sum("n").cast("bigint").alias("n"))
-        )
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        ))
 
 
 @register(
@@ -6310,44 +6328,27 @@ def stream_purchase_attribution(spark, sf_dir):
     per key), never re-running a window over history. Second-floor
     epoch diffs make the 1-hour lookback decision identical on the
     batch window, the streaming carry, and the DuckDB replay."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import last_touch_attribution_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_attr_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+    with _stream_scope(spark) as root:
+        deltas = last_touch_attribution_stateful(_events_stream(spark, sf_dir, root))
+        return _drain(deltas, "update", lambda sink: sink.groupBy("channel").agg(
+            F.sum("n").cast("bigint").alias("n_purchases"),
+            pround(F.sum("value_sum"), 2).alias("attributed_value"),
+        ))
+
+
+def _final_running_totals(sink: DataFrame) -> DataFrame:
+    """Per-key final state from ``running_totals_stateful``'s update-mode
+    emissions: the emission with the highest (monotone) running count."""
+    return (
+        sink.groupBy("user_id")
+        .agg(
+            F.max("n_events").alias("n_events"),
+            F.max_by("total", "n_events").alias("_total"),
         )
-        deltas = last_touch_attribution_stateful(stream)
-        sink = f"stream_attr_{uuid.uuid4().hex[:8]}"
-        (
-            deltas.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("channel")
-            .agg(
-                F.sum("n").cast("bigint").alias("n_purchases"),
-                pround(F.sum("value_sum"), 2).alias("attributed_value"),
-            )
-        )
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        .select("user_id", "n_events", pround(F.col("_total"), 2).alias("total"))
+    )
 
 
 @register(
@@ -6367,47 +6368,13 @@ def stream_custom_state(spark, sf_dir):
     result independent of how the source happens to split into
     micro-batches. The oracle is the batch twin: plain groupBy totals —
     the unified batch/streaming contract for custom state."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import running_totals_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_cs_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+    with _stream_scope(spark) as root:
+        totals = running_totals_stateful(
+            _events_stream(spark, sf_dir, root), key_col="user_id", value_col="value"
         )
-        totals = running_totals_stateful(stream, key_col="user_id", value_col="value")
-        sink = f"stream_cs_{uuid.uuid4().hex[:8]}"
-        (
-            totals.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max_by("total", "n_events").alias("_total"),
-            )
-            .select("user_id", "n_events", pround(F.col("_total"), 2).alias("total"))
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(totals, "update", _final_running_totals)
 
 
 @register(
@@ -6427,49 +6394,16 @@ def stream_custom_state_expiry(spark, sf_dir):
     groupBy oracle; actual cross-batch state REMOVAL is pinned by the
     multi-batch test in tests/test_streaming.py (a key going idle past the
     gap restarts from zero when it reappears)."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import running_totals_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_ce_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with _stream_scope(spark) as root:
         totals = running_totals_stateful(
-            stream, key_col="user_id", value_col="value", idle_gap_minutes=120
+            _events_stream(spark, sf_dir, root),
+            key_col="user_id",
+            value_col="value",
+            idle_gap_minutes=120,
         )
-        sink = f"stream_ce_{uuid.uuid4().hex[:8]}"
-        (
-            totals.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max_by("total", "n_events").alias("_total"),
-            )
-            .select("user_id", "n_events", pround(F.col("_total"), 2).alias("total"))
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(totals, "update", _final_running_totals)
 
 
 @register(
@@ -6500,105 +6434,19 @@ def stream_session_windows(spark, sf_dir):
     seconds, sidestepping cross-engine timestamp rendering. Complements
     ext_sessionize (the batch lag/cumsum formulation over window
     functions) with the engine-managed stateful path."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import session_windows
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_sw_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+    with _stream_scope(spark) as root:
+        out = session_windows(
+            _events_stream(spark, sf_dir, root), gap="30 minutes", watermark="2 hours"
         )
-        out = session_windows(stream, gap="30 minutes", watermark="2 hours")
-        sink = f"stream_sw_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = spark.table(sink).select(
+        return _drain(out, "complete", lambda sink: sink.select(
             F.col("session_start").cast("long").alias("session_start_es"),
             F.col("session_end").cast("long").alias("session_end_es"),
             "user_id",
             "n_events",
             "sum_value",
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
-
-
-def _sentineled_stream_dir(sf_dir: str, prefix: str) -> str:
-    """events.parquet as a stream dir PLUS a sentinel file holding one click
-    and one purchase at max(ts) + 2 days (event_id −1/−2, user_id −1).
-
-    A stream-stream OUTER join emits an unmatched row only when the
-    watermark proves no match can still arrive; on a bounded drain the
-    watermark stops at max(ts) − delay, so rows near the end would stay
-    undecided forever. The sentinel pushes the final watermark 2 days past
-    every real row, and Spark's no-data micro-batch then flushes ALL real
-    outer results before availableNow terminates. Sentinel rows are
-    filtered from the registered output (negative ids); the sentinel file
-    is written with the source parquet's EXACT arrow schema so the stream
-    schema (incl. the nanos/micros ts generation) stays uniform.
-    """
-    import os
-    import tempfile
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    stream_dir = tempfile.mkdtemp(prefix=prefix)
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
-    tbl = pq.read_table(src)
-    pdf = tbl.slice(0, 2).to_pandas()
-    max_ts = tbl.column("ts").to_pandas().max()
-    pdf["event_id"] = [-1, -2]
-    pdf["user_id"] = [-1, -1]
-    pdf["event_type"] = ["click", "purchase"]
-    pdf["ts"] = [max_ts + pd.Timedelta(days=2)] * 2
-    pq.write_table(
-        pa.Table.from_pandas(pdf, schema=tbl.schema, preserve_index=False),
-        os.path.join(stream_dir, "zz_sentinel.parquet"),
-    )
-    return stream_dir
-
-
-def _single_batch_stream_dir(sf_dir: str, prefix: str) -> str:
-    """Materialize events.parquet as a 1-file stream source directory.
-
-    The batch-DISTINCT oracle for ``stream_dedup`` holds ONLY when the whole
-    source drains in one micro-batch: across batches the watermark advances
-    and dropDuplicatesWithinWatermark may re-emit expired keys. One file +
-    availableNow + no maxFilesPerTrigger pins single-batch execution; the
-    assertion makes the contract loud if the fixture ever changes.
-    """
-    import glob
-    import os
-    import tempfile
-
-    stream_dir = tempfile.mkdtemp(prefix=prefix)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    n_files = len(glob.glob(os.path.join(stream_dir, "*.parquet")))
-    assert n_files == 1, f"single-batch stream contract broken: {n_files} files"
-    return stream_dir
+        ))
 
 
 @register(
@@ -9505,36 +9353,22 @@ def stream_outer_join(spark, sf_dir):
     (see _sentineled_stream_dir); Spark's no-data micro-batch then flushes
     every real row's outer result before availableNow terminates, giving
     EXACT batch-LEFT-JOIN parity under the full DuckDB hash oracle.
-    Sentinels (negative ids) are filtered from the output. State expiry and
-    partition sizing follow stream_interval_join."""
-    import uuid
-
+    Sentinels (negative ids) are filtered from the output. State expiry
+    follows stream_interval_join; partition sizing is _STREAM_CONFS'."""
     from sql_query_engine_rs_spark.streaming import interval_join
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _sentineled_stream_dir(sf_dir, "events_oj_")
-
-        def src():
-            return _normalize_events_ts(
-                spark.readStream.schema(static.schema).parquet(stream_dir)
-            )
-
+    with _stream_scope(spark) as root:
+        events = _events_stream(spark, sf_dir, root, sentinels=True)
         # project to the join's inputs before the stream-stream join (see
         # stream_interval_join): state stores hold only (event_id, user_id,
         # ts) per buffered row. The sentinel rows' negative event_ids
         # survive the projection for the post-drain filter.
         clicks = (
-            src().filter(F.col("event_type") == "click")
+            events.filter(F.col("event_type") == "click")
             .select("event_id", "user_id", "ts")
         )
         purchases = (
-            src().filter(F.col("event_type") == "purchase")
+            events.filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts")
         )
         joined = interval_join(
@@ -9546,27 +9380,12 @@ def stream_outer_join(spark, sf_dir):
             "user_id",
             (F.unix_timestamp("r_ts") - F.unix_timestamp("l_ts")).alias("lag_sec"),
         )
-        sink = f"stream_oj_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
         # sentinel filter AFTER the drain: filtering l_event_id inside the
         # streaming plan pushes below the left watermark node, removes the
         # left sentinel pre-join, and the left watermark then stops at
         # real-max(ts) - 30min — leaving the last ~30min of clicks'
         # outer-ness undecided (measured: 1 row short at sf0.001)
-        result = (
-            spark.table(sink).filter(F.col("click_id") >= 0).localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "append", lambda sink: sink.filter(F.col("click_id") >= 0))
 
 
 @register(
@@ -9586,43 +9405,22 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     the incremental merge loses nothing across batch boundaries. This is
     the MERGE-into-serving-table pattern every always-on pipeline ends in;
     restart-no-reprocess is pinned separately (tests/test_streaming.py)."""
-    import os
-    import tempfile
-
-    import pyarrow.parquet as pq_arrow
-
     from sql_query_engine_rs_spark.streaming import (
         _latest_upsert_version,
         foreach_batch_upsert,
     )
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        src_dir = tempfile.mkdtemp(prefix="events_fbu_src_")
-        tgt_dir = tempfile.mkdtemp(prefix="events_fbu_tgt_")
-        tbl = pq_arrow.read_table(f"{sf_dir}/events.parquet")
-        step = (tbl.num_rows + 2) // 3
-        for i in range(3):
-            pq_arrow.write_table(
-                tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
-            )
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+    with _stream_scope(spark) as root:
+        tgt_dir = os.path.join(root, "index")
+        foreach_batch_upsert(
+            _sharded_stream(spark, sf_dir, "events", root),
+            tgt_dir,
+            key_col="user_id",
+            value_col="value",
         )
-        foreach_batch_upsert(stream, tgt_dir, key_col="user_id", value_col="value")
-        final = _latest_upsert_version(spark, tgt_dir)
-        return final.select(
+        return _latest_upsert_version(spark, tgt_dir).select(
             "user_id", "n_events", r2(F.col("total")).alias("total")
         ).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -10320,39 +10118,17 @@ def stream_dedup_index_upsert(spark, sf_dir):
     incremental merge loses nothing across batch boundaries and is
     shard-order-independent. Restart-no-reprocess is pinned separately
     (tests/test_streaming.py)."""
-    import os
-    import tempfile
-
-    import pyarrow.parquet as pq_arrow
-
     from sql_query_engine_rs_spark.streaming import (
         _latest_upsert_version,
         dedup_index_upsert,
     )
 
-    prior = _set_confs(spark, {"spark.sql.shuffle.partitions": "8"})
-    try:
-        src_dir = tempfile.mkdtemp(prefix="docs_ddx_src_")
-        tgt_dir = tempfile.mkdtemp(prefix="docs_ddx_tgt_")
-        tbl = pq_arrow.read_table(f"{sf_dir}/documents.parquet")
-        step = (tbl.num_rows + 2) // 3
-        for i in range(3):
-            pq_arrow.write_table(
-                tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
-            )
-        static = parquet_scan(spark, f"{sf_dir}/documents.parquet")
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        dedup_index_upsert(stream, tgt_dir)
-        final = _latest_upsert_version(spark, tgt_dir)
-        return final.select(
+    with _stream_scope(spark) as root:
+        tgt_dir = os.path.join(root, "index")
+        dedup_index_upsert(_sharded_stream(spark, sf_dir, "documents", root), tgt_dir)
+        return _latest_upsert_version(spark, tgt_dir).select(
             "fingerprint", "first_doc_id", "n_seen"
         ).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)
 
 
 # =====================================================================
@@ -11001,19 +10777,8 @@ def stream_static_enrich(spark, sf_dir):
     bounded by the watermark), which is why enrich-then-aggregate scales to
     always-on 100 TB/day: per-batch cost is a broadcast hash join plus the
     windowed partial agg. Oracle = the identical batch join+rollup."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_enrich_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with _stream_scope(spark) as root:
+        stream = _events_stream(spark, sf_dir, root)
         dim = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
         enriched = stream.join(
             F.broadcast(dim), stream["user_id"] == dim["c_custkey"]
@@ -11033,29 +10798,12 @@ def stream_static_enrich(spark, sf_dir):
                 "sum_value",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = (
-            spark.table(sink)
-            .select(
-                F.col("window_start").cast("string").alias("window_start"),
-                "c_mktsegment",
-                "n_events",
-                "sum_value",
-            )
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "complete", lambda sink: sink.select(
+            F.col("window_start").cast("string").alias("window_start"),
+            "c_mktsegment",
+            "n_events",
+            "sum_value",
+        ))
 
 
 @register(
@@ -11082,22 +10830,10 @@ def stream_topk_per_window(spark, sf_dir):
     the snapshot idempotently, a crash-replayed batch converges to the same
     table. Rank state never enters the streaming state store — only the
     window counts do, bounded by the watermark."""
-    import os
-    import tempfile
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_topk_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with _stream_scope(spark) as root:
         agg = (
-            stream.withWatermark("ts", "2 hours")
+            _events_stream(spark, sf_dir, root)
+            .withWatermark("ts", "2 hours")
             .groupBy(F.window(F.col("ts"), "1 hour").alias("win"), F.col("event_type"))
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(
@@ -11106,7 +10842,7 @@ def stream_topk_per_window(spark, sf_dir):
                 "n_events",
             )
         )
-        tgt = os.path.join(tempfile.mkdtemp(prefix="events_topk_tbl_"), "topk")
+        tgt = os.path.join(root, "topk")
 
         def rank_and_write(batch_df, batch_id):
             ranked = per_group_top_k(
@@ -11126,8 +10862,6 @@ def stream_topk_per_window(spark, sf_dir):
             .awaitTermination()
         )
         return parquet_scan(spark, tgt).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)
 
 
 def _md5_bucket4096_sql(expr: str) -> str:
@@ -12160,18 +11894,14 @@ def stream_blocklist_filter(spark, sf_dir):
     no join state store) — the same always-on economics as
     stream_static_enrich, with the anti side doing the policy work.
     Oracle = the batch WHERE-filtered rollup."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with _stream_scope(spark) as root:
+        # one static scan (one schema job) serves the stream's schema, the
+        # blocklist and the batch audit below, so not _events_stream
         static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_block_")
         stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+            spark.readStream.schema(static.schema).parquet(
+                _single_batch_stream_dir(sf_dir, root)
+            )
         )
         blocklist = (
             static.select("user_id").distinct().filter(F.col("user_id") % 10 == 0)
@@ -12190,17 +11920,7 @@ def stream_blocklist_filter(spark, sf_dir):
                 "_approx_users",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        drained = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
+        drained = _drain(out, "complete")
         # exact distinct users per window is a batch follow-up on the tiny
         # drained frame's windows (24*30 rows) joined to the gated batch twin
         # — the streaming side carries approx_count_distinct (HLL++, the
@@ -12230,8 +11950,6 @@ def stream_blocklist_filter(spark, sf_dir):
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -12387,21 +12105,10 @@ def stream_sliding_windows(spark, sf_dir):
     15-minute epoch grid (the WHERE clause keeps the event's containing
     windows — identical to window()'s assignment rule for aligned windows).
     """
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_slide_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with _stream_scope(spark) as root:
         out = (
-            stream.withWatermark("ts", "2 hours")
+            _events_stream(spark, sf_dir, root)
+            .withWatermark("ts", "2 hours")
             .groupBy(
                 F.window(F.col("ts"), "1 hour", "15 minutes").alias("win"),
                 F.col("event_type"),
@@ -12417,20 +12124,7 @@ def stream_sliding_windows(spark, sf_dir):
                 "sum_value",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "complete")
 
 
 @register(
@@ -15505,49 +15199,22 @@ def stream_ewma_monitor(spark, sf_dir):
     agree bit for bit before the 4-dp round. This is the always-on shape
     for ingest-rate monitoring at 100 TB: per-key state is O(1), emissions
     are per-batch deltas, and no history is ever re-scanned."""
-    import tempfile
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import ewma_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    with _stream_scope(spark) as root:
         e = events_table(spark, sf_dir)
         hourly = e.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
         ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-        src_dir = tempfile.mkdtemp(prefix="ewma_stream_")
+        src_dir = os.path.join(root, "hourly")
         hourly.coalesce(1).write.mode("overwrite").parquet(src_dir)
-        stream = spark.readStream.schema(hourly.schema).parquet(src_dir)
-        out = ewma_stateful(stream)
-        sink = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("event_type")
-            .agg(
-                F.max("n_hours").cast("bigint").alias("n_hours"),
-                pround(F.max_by("ewma", "n_hours"), 4).alias("ewma"),
-                F.max_by("n_anomalies", "n_hours").cast("bigint").alias("n_anomalies"),
-                pround(F.max_by("max_dev", "n_hours"), 4).alias("max_dev"),
-            )
-        )
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        out = ewma_stateful(spark.readStream.schema(hourly.schema).parquet(src_dir))
+        return _drain(out, "update", lambda sink: sink.groupBy("event_type").agg(
+            F.max("n_hours").cast("bigint").alias("n_hours"),
+            pround(F.max_by("ewma", "n_hours"), 4).alias("ewma"),
+            F.max_by("n_anomalies", "n_hours").cast("bigint").alias("n_anomalies"),
+            pround(F.max_by("max_dev", "n_hours"), 4).alias("max_dev"),
+        ))
 
 
 # =====================================================================
@@ -16714,28 +16381,19 @@ def stream_late_data_drop(spark, sf_dir):
     is the semantic that keeps state finite on an always-on 100 TB/day
     ingest: the watermark is the contract that lets finalized state be
     dropped no matter how late the data source can straggle."""
-    import os
-    import tempfile
     import time
-    import uuid
 
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq_arrow
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    with _stream_scope(spark) as root:
         tbl = pq_arrow.read_table(f"{sf_dir}/events.parquet")
         ts = tbl.column("ts")
         mn = pc.min(ts).as_py()
         mx = pc.max(ts).as_py()
         split = mn + __import__("datetime").timedelta(days=5)
-        src_dir = tempfile.mkdtemp(prefix="events_late_src_")
-        import pyarrow as pa
-
+        src_dir = tempfile.mkdtemp(prefix="events_late_src_", dir=root)
         split_scalar = pa.scalar(split, type=ts.type)
         mx_scalar = pa.scalar(mx, type=ts.type)
         ontime = tbl.filter(
@@ -16767,29 +16425,12 @@ def stream_late_data_drop(spark, sf_dir):
             .parquet(src_dir)
         )
         out = windowed_counts(stream, "1 hour", watermark="48 hours")
-        sink = f"stream_late_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = (
-            spark.table(sink)
-            .select(
-                F.col("window_start").cast("string").alias("window_start"),
-                "event_type",
-                F.col("n_events").cast("bigint").alias("n_events"),
-                "sum_value",
-            )
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "append", lambda sink: sink.select(
+            F.col("window_start").cast("string").alias("window_start"),
+            "event_type",
+            F.col("n_events").cast("bigint").alias("n_events"),
+            "sum_value",
+        ))
 
 
 @register(
@@ -19106,27 +18747,18 @@ def stream_min_watermark_union(spark, sf_dir):
     split at min(ts)+20 days keeps the sources disjoint so the union is
     a clean partition of the corpus. Window ends are hour-aligned vs a
     microsecond-offset watermark — no boundary ties."""
-    import os
-    import tempfile
-    import uuid
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq_arrow
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    with _stream_scope(spark) as root:
         tbl = pq_arrow.read_table(f"{sf_dir}/events.parquet")
         ts = tbl.column("ts")
         mn = pc.min(ts).as_py()
         split = mn + __import__("datetime").timedelta(days=20)
         split_scalar = pa.scalar(split, type=ts.type)
-        dir_a = tempfile.mkdtemp(prefix="events_wma_")
-        dir_b = tempfile.mkdtemp(prefix="events_wmb_")
+        dir_a = tempfile.mkdtemp(prefix="events_wma_", dir=root)
+        dir_b = tempfile.mkdtemp(prefix="events_wmb_", dir=root)
         pq_arrow.write_table(
             tbl.filter(pc.less(ts, split_scalar)), os.path.join(dir_a, "a.parquet")
         )
@@ -19157,20 +18789,7 @@ def stream_min_watermark_union(spark, sf_dir):
                 "sum_value",
             )
         )
-        sink = f"stream_wmu_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "append")
 
 
 @register(
@@ -20807,23 +20426,12 @@ def stream_variant_telemetry(spark, sf_dir):
 
     Reference: beyond scope — no streaming or semi-structured surface
     exists in the reference."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_variant_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with _stream_scope(spark) as root:
         v = F.parse_json("props")
         k = F.try_variant_get(v, "$.k", "int")
         out = (
-            stream.withColumn("k", k)
+            _events_stream(spark, sf_dir, root)
+            .withColumn("k", k)
             .withWatermark("ts", "2 hours")
             .groupBy(
                 F.window(F.col("ts"), "1 hour").alias("win"),
@@ -20844,20 +20452,7 @@ def stream_variant_telemetry(spark, sf_dir):
                 "max_k",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        drained = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return drained
-    finally:
-        _restore_confs(spark, prior)
+        return _drain(out, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -21611,37 +21206,15 @@ def stream_url_dedup_upsert(spark, sf_dir):
     deliberately absent here: an exact distinct-raw-URL count is not
     mergeable without carrying the raw set per key; production indexes
     carry a sketch instead.)"""
-    import os
-    import tempfile
-
-    import pyarrow.parquet as pq_arrow
-
     from sql_query_engine_rs_spark.streaming import (
         _latest_upsert_version,
         url_index_upsert,
     )
 
-    prior = _set_confs(spark, {"spark.sql.shuffle.partitions": "8"})
-    try:
-        src_dir = tempfile.mkdtemp(prefix="docs_url_src_")
-        tgt_dir = tempfile.mkdtemp(prefix="docs_url_tgt_")
-        tbl = pq_arrow.read_table(f"{sf_dir}/documents.parquet")
-        step = (tbl.num_rows + 2) // 3
-        for i in range(3):
-            pq_arrow.write_table(
-                tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
-            )
-        static = parquet_scan(spark, f"{sf_dir}/documents.parquet")
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-            .withColumn("url", _raw_url_col())
-        )
-        url_index_upsert(stream, tgt_dir)
-        final = _latest_upsert_version(spark, tgt_dir)
-        return final.select(
+    with _stream_scope(spark) as root:
+        tgt_dir = os.path.join(root, "index")
+        stream = _sharded_stream(spark, sf_dir, "documents", root)
+        url_index_upsert(stream.withColumn("url", _raw_url_col()), tgt_dir)
+        return _latest_upsert_version(spark, tgt_dir).select(
             "canonical_url", "keeper_doc_id", "n_docs"
         ).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)

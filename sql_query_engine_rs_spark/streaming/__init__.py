@@ -13,6 +13,8 @@ the Spark unified-batch-streaming contract.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -83,22 +85,6 @@ def session_windows(
             "sum_value",
         )
     )
-
-
-def run_stream_once(stream_df: DataFrame, sink_table: str) -> None:
-    """Drain a stream into an in-memory sink with availableNow (test helper)."""
-    (
-        stream_df.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete" if _has_aggregation(stream_df) else "append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _has_aggregation(df: DataFrame) -> bool:
-    return "Aggregate" in df._jdf.queryExecution().analyzed().toString()  # type: ignore[attr-defined]
 
 
 def running_totals_stateful(
@@ -552,24 +538,42 @@ def interval_join(
     )
 
 
-def foreach_batch_upsert(
+# Per-column merge of a batch partial into the previous snapshot's value.
+# least() skips NULLs (returns the smallest non-null), so the min-merge
+# needs no coalesce scaffolding; the sum-merge treats a side with no row
+# for the key as 0.
+_UPSERT_MERGES = {
+    "min": F.least,
+    "sum": lambda prev, batch: F.coalesce(prev, F.lit(0)) + F.coalesce(batch, F.lit(0)),
+}
+
+
+def _versioned_upsert(
     stream_df: DataFrame,
     target_dir: str,
-    key_col: str = "user_id",
-    value_col: str = "value",
+    key: str,
+    partials: Callable[[DataFrame], DataFrame],
+    merges: dict[str, str],
 ) -> None:
     """foreachBatch keyed upsert into a versioned parquet table — the
-    exactly-once MERGE pattern for sinks with no transactional support.
+    exactly-once MERGE pattern for sinks with no transactional support,
+    shared by the three index sinks below.
 
-    Each micro-batch aggregates its rows per key, reads the PREVIOUS
-    version snapshot, full-outer merges, and writes version ``v=<batch_id>``
-    — a pure function of (prior state, batch_id's data). A batch replayed
-    after a crash rewrites the SAME version directory from the SAME inputs,
-    so re-processing is idempotent: that, plus the checkpoint's batch-id
-    tracking, is Spark's end-to-end exactly-once contract for non-
-    transactional sinks. Readers take the highest committed version
-    (snapshot isolation by directory convention — the same versioned-
-    manifest idea Delta/Iceberg formalize).
+    Each micro-batch is reduced by ``partials`` to one row per ``key``
+    holding the index's value columns, then full-outer merged into the
+    PREVIOUS version snapshot column by column (``merges`` maps each value
+    column to ``"min"`` or ``"sum"``), and written as version
+    ``v=<batch_id>`` — a pure function of (prior state, batch_id's data).
+    Both merges are commutative and associative, so the final snapshot
+    equals the one-pass batch aggregate regardless of how rows are sharded
+    into batches. A batch replayed after a crash reads the snapshot below
+    its own id and rewrites the SAME version directory from the SAME
+    inputs, so re-processing is idempotent: that, plus the checkpoint's
+    batch-id tracking (``<target_dir>/_checkpoint``), is Spark's end-to-end
+    exactly-once contract for non-transactional sinks. Readers take the
+    highest committed version (``_latest_upsert_version``; snapshot
+    isolation by directory convention — the same versioned-manifest idea
+    Delta/Iceberg formalize).
 
     Blocks until the availableNow drain finishes.
     """
@@ -578,30 +582,18 @@ def foreach_batch_upsert(
     spark = stream_df.sparkSession
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        bagg = (
-            batch_df.groupBy(key_col)
-            .agg(
-                F.count(F.lit(1)).alias("_bn"),
-                F.sum(value_col).cast("double").alias("_btotal"),
-            )
-        )
+        part = partials(batch_df)
         prev = _latest_upsert_version(spark, target_dir, below=batch_id)
-        if prev is None:
-            merged = bagg.select(
-                key_col,
-                F.col("_bn").alias("n_events"),
-                F.col("_btotal").alias("total"),
+        if prev is not None:
+            batch = part.select(key, *[F.col(c).alias(f"_b_{c}") for c in merges])
+            part = prev.join(batch, on=key, how="full_outer").select(
+                key,
+                *[
+                    _UPSERT_MERGES[how](F.col(c), F.col(f"_b_{c}")).alias(c)
+                    for c, how in merges.items()
+                ],
             )
-        else:
-            merged = (
-                prev.join(bagg, on=key_col, how="full_outer")
-                .select(
-                    key_col,
-                    (F.coalesce(F.col("n_events"), F.lit(0)) + F.coalesce(F.col("_bn"), F.lit(0))).alias("n_events"),
-                    (F.coalesce(F.col("total"), F.lit(0.0)) + F.coalesce(F.col("_btotal"), F.lit(0.0))).alias("total"),
-                )
-            )
-        merged.write.mode("overwrite").parquet(os.path.join(target_dir, f"v={batch_id}"))
+        part.write.mode("overwrite").parquet(os.path.join(target_dir, f"v={batch_id}"))
 
     (
         stream_df.writeStream.foreachBatch(merge)
@@ -632,6 +624,35 @@ def _latest_upsert_version(spark, target_dir: str, below: int | None = None):
     return spark.read.parquet(os.path.join(target_dir, f"v={max(versions)}"))
 
 
+def foreach_batch_upsert(
+    stream_df: DataFrame,
+    target_dir: str,
+    key_col: str = "user_id",
+    value_col: str = "value",
+) -> None:
+    """foreachBatch keyed upsert into a versioned parquet table — the
+    exactly-once MERGE pattern for sinks with no transactional support.
+
+    Each micro-batch aggregates its rows per key (event count + value sum),
+    reads the PREVIOUS version snapshot, full-outer sum-merges, and writes
+    version ``v=<batch_id>`` (see ``_versioned_upsert`` for the
+    idempotent-replay contract).
+
+    Index schema: (<key_col>, n_events bigint, total double).
+
+    Blocks until the availableNow drain finishes.
+    """
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(key_col).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(value_col).cast("double").alias("total"),
+        )
+
+    _versioned_upsert(
+        stream_df, target_dir, key_col, partials, {"n_events": "sum", "total": "sum"}
+    )
+
+
 def dedup_index_upsert(
     stream_df: DataFrame,
     target_dir: str,
@@ -653,61 +674,30 @@ def dedup_index_upsert(
     Index schema: (fingerprint, first_doc_id, n_seen) — first_doc_id is the
     canonical kept head (the same keep-min-id rule as the batch dedup
     family; a probe that hits the index drops its doc), n_seen the running
-    occurrence count (the dup-rate audit). Versioned-parquet sink
-    (``v=<batch_id>`` written from ``v=<batch_id-1>``, same idempotent
-    replay contract as ``foreach_batch_upsert``): a crash-replayed batch
-    rewrites the same version from the same inputs, so with the
-    checkpoint's batch-id tracking the index is exactly-once without
-    transactions. At 100 TB the snapshot would be bucketed by fingerprint
-    prefix so the per-batch merge join is co-partitioned.
+    occurrence count (the dup-rate audit). Versioned-parquet sink with the
+    idempotent-replay contract of ``_versioned_upsert``. At 100 TB the
+    snapshot would be bucketed by fingerprint prefix so the per-batch
+    merge join is co-partitioned.
 
     Blocks until the availableNow drain finishes.
     """
-    import os
-
     from sql_query_engine_rs_spark.functions.text import fingerprint
 
-    spark = stream_df.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        bfp = (
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.col(id_col), fingerprint(F.col(text_col)).alias("fingerprint")
             )
             .groupBy("fingerprint")
             .agg(
-                F.min(id_col).cast("bigint").alias("_bfirst"),
-                F.count(F.lit(1)).alias("_bn"),
+                F.min(id_col).cast("bigint").alias("first_doc_id"),
+                F.count(F.lit(1)).alias("n_seen"),
             )
-        )
-        prev = _latest_upsert_version(spark, target_dir, below=batch_id)
-        if prev is None:
-            merged = bfp.select(
-                "fingerprint",
-                F.col("_bfirst").alias("first_doc_id"),
-                F.col("_bn").alias("n_seen"),
-            )
-        else:
-            # least() skips NULLs (returns the smallest non-null), so the
-            # min-merge needs no coalesce scaffolding
-            merged = prev.join(bfp, on="fingerprint", how="full_outer").select(
-                "fingerprint",
-                F.least(F.col("first_doc_id"), F.col("_bfirst")).alias("first_doc_id"),
-                (
-                    F.coalesce(F.col("n_seen"), F.lit(0))
-                    + F.coalesce(F.col("_bn"), F.lit(0))
-                ).alias("n_seen"),
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target_dir, f"v={batch_id}")
         )
 
-    (
-        stream_df.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(target_dir, "_checkpoint"))
-        .start()
-        .awaitTermination()
+    _versioned_upsert(
+        stream_df, target_dir, "fingerprint", partials,
+        {"first_doc_id": "min", "n_seen": "sum"},
     )
 
 
@@ -728,54 +718,27 @@ def url_index_upsert(
     aggregate regardless of sharding — the DuckDB oracle's check.
 
     Index schema: (canonical_url, keeper_doc_id, n_docs). Same
-    versioned-parquet idempotent-replay contract as dedup_index_upsert
-    (v=<batch_id> written from v=<batch_id-1>; crash-replayed batches
-    rewrite the same version). At 100 TB the snapshot would be bucketed
-    by canonical-url hash so the per-batch merge join is co-partitioned.
+    versioned-parquet idempotent-replay contract (``_versioned_upsert``).
+    At 100 TB the snapshot would be bucketed by canonical-url hash so the
+    per-batch merge join is co-partitioned.
 
     Blocks until the availableNow drain finishes.
     """
-    import os
-
     from sql_query_engine_rs_spark.functions.text import canonicalize_url
 
-    spark = stream_df.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        bu = (
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.col(id_col), canonicalize_url(F.col(url_col)).alias("canonical_url")
             )
             .groupBy("canonical_url")
             .agg(
-                F.min(id_col).cast("bigint").alias("_bkeep"),
-                F.count(F.lit(1)).alias("_bn"),
+                F.min(id_col).cast("bigint").alias("keeper_doc_id"),
+                F.count(F.lit(1)).alias("n_docs"),
             )
-        )
-        prev = _latest_upsert_version(spark, target_dir, below=batch_id)
-        if prev is None:
-            merged = bu.select(
-                "canonical_url",
-                F.col("_bkeep").alias("keeper_doc_id"),
-                F.col("_bn").alias("n_docs"),
-            )
-        else:
-            merged = prev.join(bu, on="canonical_url", how="full_outer").select(
-                "canonical_url",
-                F.least(F.col("keeper_doc_id"), F.col("_bkeep")).alias("keeper_doc_id"),
-                (
-                    F.coalesce(F.col("n_docs"), F.lit(0))
-                    + F.coalesce(F.col("_bn"), F.lit(0))
-                ).alias("n_docs"),
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target_dir, f"v={batch_id}")
         )
 
-    (
-        stream_df.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(target_dir, "_checkpoint"))
-        .start()
-        .awaitTermination()
+    _versioned_upsert(
+        stream_df, target_dir, "canonical_url", partials,
+        {"keeper_doc_id": "min", "n_docs": "sum"},
     )

@@ -494,14 +494,13 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
     Scoped here so the tiny-scale test suite doesn't pay sketch costs."""
     from pyspark.sql import functions as F
 
-    from sql_query_engine_rs_spark.queries import _restore_confs, _set_confs
+    from sql_query_engine_rs_spark.queries import _scoped_confs
 
-    prior = _set_confs(spark, {
+    with _scoped_confs(spark, {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
-    })
-    try:
+    }):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -511,8 +510,6 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
         assert "bloom_filter_agg" in plan, plan[:2000]
         # the filter must land on the FACT side as a scan-level predicate
         assert "might_contain" in plan.lower()
-    finally:
-        _restore_confs(spark, prior)
 
 
 def test_plan_report_shapes(spark, sf_dir):
@@ -582,9 +579,9 @@ def test_aqe_skew_join_split_recipe(spark, sf_dir):
     answer when the skewed op is an AGGREGATE rather than a join."""
     from pyspark.sql import functions as F
 
-    from sql_query_engine_rs_spark.queries import _restore_confs, _set_confs
+    from sql_query_engine_rs_spark.queries import _scoped_confs
 
-    prior = _set_confs(spark, {
+    with _scoped_confs(spark, {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
@@ -593,8 +590,7 @@ def test_aqe_skew_join_split_recipe(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    }):
         # 50k rows on ONE key + a uniform remainder; right side small
         left = spark.range(50_000).select(
             F.lit(7).alias("k"), F.col("id").alias("payload")
@@ -608,8 +604,6 @@ def test_aqe_skew_join_split_recipe(spark, sf_dir):
         j.collect()
         executed = j._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in executed, executed[:2000]
-    finally:
-        _restore_confs(spark, prior)
 
 
 def test_bench_set_is_registered(spark, sf_dir, tmp_path, monkeypatch):

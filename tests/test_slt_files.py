@@ -68,13 +68,18 @@ def _slt_files() -> list[str]:
     return sorted(glob.glob(os.path.join(SLT_DIR, "**", "*.slt"), recursive=True))
 
 
+# ids as a list, not a callable: on an empty corpus pytest passes NOTSET to
+# an ids callable and collection fails
+_SLT_FILES = _slt_files()
+
+
 @pytest.mark.skipif(not os.path.isdir(SLT_DIR), reason="reference slt corpus not present")
 def test_slt_corpus_discovered():
     assert len(_slt_files()) >= 3  # select, filter, aggregation
 
 
 @pytest.mark.skipif(not os.path.isdir(SLT_DIR), reason="reference slt corpus not present")
-@pytest.mark.parametrize("slt_file", _slt_files(), ids=os.path.basename)
+@pytest.mark.parametrize("slt_file", _SLT_FILES, ids=[os.path.basename(p) for p in _SLT_FILES])
 def test_slt_file(db, slt_file):
     blocks = parse_slt(slt_file)
     assert blocks, f"no query blocks parsed from {slt_file}"

@@ -391,6 +391,10 @@ def test_foreachbatch_upsert_restart_no_reprocess(spark, tmp_path):
         (r.user_id, r.n_events, r.total)
         for r in _latest_upsert_version(spark, tgt_dir).collect()
     } == {(1, 2, 12.5), (2, 1, 5.0), (3, 1, 1.0)}
+    # the merged (not first-batch) snapshot keeps the index schema
+    assert _latest_upsert_version(spark, tgt_dir).dtypes == [
+        ("user_id", "bigint"), ("n_events", "bigint"), ("total", "double"),
+    ]
 
 
 def test_dedup_index_upsert_restart_no_reprocess(spark, tmp_path):
@@ -460,6 +464,9 @@ def test_dedup_index_upsert_restart_no_reprocess(spark, tmp_path):
         for r in _latest_upsert_version(spark, tgt_dir).collect()
     }
     assert after == {3: 3, 11: 1, 20: 1}
+    assert _latest_upsert_version(spark, tgt_dir).dtypes == [
+        ("fingerprint", "string"), ("first_doc_id", "bigint"), ("n_seen", "bigint"),
+    ]
 
 
 def test_transition_state_carries_across_batches(spark, tmp_path):
@@ -868,3 +875,6 @@ def test_url_index_upsert_restart_no_reprocess(spark, tmp_path):
         "b.example.com/q": (12, 1),
         "c.example.com/r": (20, 1),
     }
+    assert _latest_upsert_version(spark, tgt_dir).dtypes == [
+        ("canonical_url", "string"), ("keeper_doc_id", "bigint"), ("n_docs", "bigint"),
+    ]
