@@ -80,6 +80,8 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from sql_query_engine_rs_spark.functions.caching import release_caches
+
     spark = SparkSession.builder.master("local[8]").appName("parity-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     bad = []
@@ -91,6 +93,7 @@ def main(argv: list[str] | None = None) -> int:
                 why = check(spark, con, qs[name], osql.get(name), sf_dir)
             except Exception as e:  # noqa: BLE001 — report, don't crash the sweep
                 why = f"{type(e).__name__}: {e}"[:400]
+            release_caches()
             print(f"[{i + 1}/{len(names)}] {sf} {name}: {'ok' if why is None else 'BAD'}", flush=True)
             if why is not None:
                 print(f"  {why}", flush=True)

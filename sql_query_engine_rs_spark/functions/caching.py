@@ -13,15 +13,23 @@ drivers (bench.py, test fixtures, long-running jobs) call ``release_caches()``
 after materializing each query's result. Spark's LRU would eventually evict
 stale blocks under pressure, but explicit release keeps storage memory for
 the caches that are actually live.
+
+Builders that write files and return a lazy read of them have the same
+problem with disk: the directory must outlive the call. They take it from
+``tracked_temp_dir``, and the same ``release_caches()`` / ``tracked_caches()``
+calls remove it.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 _LIVE_CACHES: list[DataFrame] = []
+_LIVE_DIRS: list[str] = []
 
 
 def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
@@ -31,15 +39,31 @@ def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
     return df
 
 
-def release_caches() -> int:
-    """Unpersist every tracked cache (non-blocking); returns how many."""
-    n = len(_LIVE_CACHES)
-    for df in _LIVE_CACHES:
+def tracked_temp_dir(prefix: str) -> str:
+    """``tempfile.mkdtemp(prefix=prefix)`` registered for removal by the next
+    ``release_caches()`` (or the enclosing ``tracked_caches()`` scope)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _LIVE_DIRS.append(path)
+    return path
+
+
+def _release(caches: list[DataFrame], dirs: list[str]) -> None:
+    for df in caches:
         try:
             df.unpersist(blocking=False)
         except Exception:
             pass  # session already stopped; nothing to release
+    for path in dirs:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def release_caches() -> int:
+    """Unpersist every tracked cache (non-blocking) and remove every tracked
+    temp dir; returns how many caches."""
+    n = len(_LIVE_CACHES)
+    _release(_LIVE_CACHES, _LIVE_DIRS)
     _LIVE_CACHES.clear()
+    _LIVE_DIRS.clear()
     return n
 
 
@@ -57,13 +81,10 @@ def tracked_caches():
     a global ``release_caches()`` remains correct inside or outside a scope
     (already-released frames are skipped harmlessly).
     """
-    mark = len(_LIVE_CACHES)
+    mark, dir_mark = len(_LIVE_CACHES), len(_LIVE_DIRS)
     try:
         yield
     finally:
-        for df in _LIVE_CACHES[mark:]:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
+        _release(_LIVE_CACHES[mark:], _LIVE_DIRS[dir_mark:])
         del _LIVE_CACHES[mark:]
+        del _LIVE_DIRS[dir_mark:]

@@ -10,14 +10,14 @@ Scale design notes
   map-side combine — the cheapest possible distributed dedup. Fingerprint
   (md5 of normalized text) dedups 100 TB while shuffling only (hash, id)
   pairs, never the documents themselves.
-- MinHash-LSH: per-doc signatures are map-only; candidate generation is a
-  group-by on band keys (shuffle of small keys); only candidate PAIRS get the
-  exact-Jaccard verification. This is the standard near-linear near-dup path.
-  Hashing uses md5 (portable → DuckDB oracle can replicate); substitute
-  xxhash64 for ~2× faster signatures when cross-engine determinism is not
-  required.
-- SimHash: 64-bit signature via per-token hashes; near-dups = signatures at
-  small Hamming distance, found by banding the 64 bits (map + one group-by).
+- MinHash-LSH and SimHash are one filter-then-verify pipeline with a
+  pluggable signature: a map-only per-doc signature persisted once
+  (_persist_nonempty), band keys exploded from it, flood buckets capped and
+  the band self-join deduplicated (_band_pairs); only candidate PAIRS get
+  the verification (exact Jaccard, signature estimate, or Hamming cut).
+  This is the standard near-linear near-dup path. Hashing uses md5 so the
+  DuckDB oracle replicates every signature bit for bit: MinHash minima are
+  digest slices (_minhash_signed), SimHash bits are md5-nibble votes.
 - Embedding near-dup: cosine > threshold over an array<float> column;
   all-pairs within LSH/band buckets, never a global cross join.
 """
@@ -89,11 +89,6 @@ def auto_num_planes(n: int, target_bucket: int = LSH_TARGET_BUCKET) -> int:
 
 
 # ---------------------------------------------------------------- exact
-
-def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Keep one arbitrary row per distinct key (hash-shuffle + combine)."""
-    return df.dropDuplicates(subset) if subset else df.distinct()
-
 
 def exact_dedup_groups(df: DataFrame, id_col: str, key_cols: list[str]) -> DataFrame:
     """Deterministic variant: per duplicate-group keep ``min(id)`` and report
@@ -262,15 +257,83 @@ def _minhash_component_from_digests(digests: Column, slot: int) -> Column:
     return F.array_min(F.transform(digests, lambda h: F.substring(h, slot * 4 + 1, 4)))
 
 
-def minhash_signature(text: Column, num_hashes: int = 8, ngram: int = 3) -> Column:
-    """array<string> MinHash signature over distinct word n-gram shingles of
-    the normalized text (ngram=1 → plain token set)."""
-    shingles = token_ngrams(normalized_text(text), ngram)
-    comps = []
-    for i in range(num_hashes):
-        digests = _minhash_digests(shingles, i // 8)
-        comps.append(_minhash_component_from_digests(digests, i % 8))
-    return F.array(*comps)
+def _minhash_signed(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, ngram: int
+) -> DataFrame:
+    """(_id, _grams, _sig): the one MinHash signature constructor behind
+    every banded MinHash path — ``num_hashes`` md5 min-hashes over the
+    distinct word ``ngram`` shingles of the normalized text, as
+    array<string>. Map-only; callers decide whether to persist it.
+
+    Tokens live in their own projection so the shingle build references a
+    column, not the regex pipeline (see shingles_from_tokens), and each
+    block's digest array lives in its own projection: one md5 array feeds 8
+    substring-min components, and CollapseProject keeps the
+    multiply-referenced non-cheap transform from being inlined 8x.
+    """
+    base = _ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")))
+    toked = base.select("_id", tokens(normalized_text(F.col("_text"))).alias("_toks"))
+    n_blocks = (num_hashes + 7) // 8
+    return (
+        toked.select("_id", shingles_from_tokens(F.col("_toks"), ngram).alias("_grams"))
+        .select(
+            "_id",
+            "_grams",
+            *[_minhash_digests(F.col("_grams"), b).alias(f"_digs{b}") for b in range(n_blocks)],
+        )
+        .select(
+            "_id",
+            "_grams",
+            F.array(
+                *[
+                    _minhash_component_from_digests(F.col(f"_digs{i // 8}"), i % 8)
+                    for i in range(num_hashes)
+                ]
+            ).alias("_sig"),
+        )
+    )
+
+
+def _minhash_bands(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(_id, _band_key): ``bands`` keys of ``num_hashes/bands`` signature
+    components each, prefixed with the band number."""
+    rows_per_band = num_hashes // bands
+    return sig.select(
+        "_id",
+        F.explode(
+            F.array(*[
+                F.concat_ws(
+                    "|", F.lit(str(b)),
+                    *[F.col("_sig")[b * rows_per_band + r] for r in range(rows_per_band)],
+                )
+                for b in range(bands)
+            ])
+        ).alias("_band_key"),
+    )
+
+
+def _persist_nonempty(frame: DataFrame, nonempty: Column) -> DataFrame:
+    """Persist ``frame`` (tracked), materialize it with one eager count(),
+    and only then keep the rows where ``nonempty`` holds.
+
+    Docs with no shingles carry no n-gram evidence, and their signature is
+    degenerate (all-null MinHash, all-zero SimHash): left in, every short
+    doc would band into one spurious O(n^2) near-dup clique and one hot
+    band key. The order matters, for two reasons:
+    (a) the band self-join and the verify joins are broadcast-planned, and
+    Spark kicks off their build futures concurrently — without a populated
+    cache each future recomputes the full shingle/signature pass;
+    (b) a filter inside the cached plan gets pushed below the
+    ensure_parallelism repartition by Catalyst, dragging the whole shingle
+    computation (needed to evaluate the predicate) onto the 1-partition
+    scan side — measured 34 s single-threaded vs 2 s parallel at sf0.1.
+
+    Cache lifetime: tracked; batch drivers release via
+    caching.release_caches().
+    """
+    frame = persist_tracked(frame)
+    frame.count()
+    return frame.filter(nonempty)
 
 
 def _cap_band_size(banded: DataFrame, key: str, max_band_size: int | None) -> DataFrame:
@@ -292,6 +355,21 @@ def _cap_band_size(banded: DataFrame, key: str, max_band_size: int | None) -> Da
     return banded.join(
         counts.filter(F.col("_band_n") <= max_band_size), key
     ).drop("_band_n")
+
+
+def _band_pairs(banded: DataFrame, max_band_size: int | None, *extra: Column) -> DataFrame:
+    """Candidate pairs (id_a, id_b, *extra) of a banded (_id, _band_key, ...)
+    frame: flood buckets capped (see _cap_band_size), docs sharing any band
+    key self-joined, id_a < id_b, deduplicated across bands. ``extra``
+    columns may read either side as ``a.<col>`` / ``b.<col>``."""
+    banded = _cap_band_size(banded, "_band_key", max_band_size)
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(b, on="_band_key")
+        .filter(F.col("a._id") < F.col("b._id"))
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"), *extra)
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def minhash_lsh_candidates(
@@ -320,82 +398,18 @@ def minhash_lsh_candidates(
     Plan shape (matters at 100 TB): tokenize→shingle→md5-signature runs ONCE
     into a single persisted (id, grams, sig) frame feeding every consumer —
     band-key derivation (counts, cap join-back, both sides of the candidate
-    self-join all re-explode the cached 8-component signature, a trivial
-    concat per row) and both sides of the exact-Jaccard verify. One
-    materialization barrier instead of the previous two (separate grams and
-    banded caches): the md5 pass is paid exactly once, the second eager
-    count() job disappears, and the cache footprint is one frame. Full
-    shingle arrays are only shuffled for the (tiny) candidate set plus one
-    hash-partitioning of the grams frame.
+    self-join all re-explode the cached signature, a trivial concat per
+    row) and both sides of the exact-Jaccard verify. The md5 pass is paid
+    exactly once, behind one eager count() job (see _persist_nonempty).
+    Full shingle arrays are only shuffled for the (tiny) candidate set plus
+    one hash-partitioning of the grams frame.
     """
-    rows_per_band = num_hashes // bands
-    base = _ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")))
-    # Tokens live in their own projection so the shingle build references a
-    # column, not the regex pipeline (see shingles_from_tokens; CollapseProject
-    # keeps a multiply-referenced non-cheap alias un-inlined).
-    toked = base.select("_id", tokens(normalized_text(F.col("_text"))).alias("_toks"))
-    # Persisted: shingles AND the md5 min-hash signature in one frame. One
-    # tokenize+shingle+md5 pass, serialized MEMORY_AND_DISK, beats
-    # recomputing the regex/hash pipeline per consumer — the standard trade
-    # in production text-dedup pipelines.
-    # Cache lifetime: tracked; batch drivers release via caching.release_caches().
-    #
-    # The cache is materialized EAGERLY, and the degenerate-doc filter is
-    # applied on top of (not inside) the persisted plan, for two reasons:
-    # (a) the band self-join and the verify joins are broadcast-planned, and
-    # Spark kicks off their build futures concurrently — without a populated
-    # cache each future recomputes the full shingle pass; (b) a filter inside
-    # the cached plan gets pushed below the ensure_parallelism repartition by
-    # Catalyst, dragging the whole shingle computation (needed to evaluate
-    # size(_grams) > 0) onto the 1-partition scan side — measured 34 s
-    # single-threaded vs 2 s parallel at sf0.1.
-    #
-    # Digest arrays live in their own projection: each md5 array feeds 8
-    # substring-min components, and Catalyst's CollapseProject keeps the
-    # multiply-referenced non-cheap transform from being inlined 8x.
-    n_blocks = (num_hashes + 7) // 8
-    grams_df = persist_tracked(
-        toked.select("_id", shingles_from_tokens(F.col("_toks"), ngram).alias("_grams"))
-        .select(
-            "_id",
-            "_grams",
-            *[_minhash_digests(F.col("_grams"), b).alias(f"_digs{b}") for b in range(n_blocks)],
-        )
-        .select(
-            "_id",
-            "_grams",
-            F.array(
-                *[
-                    _minhash_component_from_digests(F.col(f"_digs{i // 8}"), i % 8)
-                    for i in range(num_hashes)
-                ]
-            ).alias("_sig"),
-        )
+    signed = _persist_nonempty(
+        _minhash_signed(df, id_col, text_col, num_hashes, ngram), F.size("_grams") > 0
     )
-    grams_df.count()
-    # Docs with no shingles are dropped — they carry no n-gram evidence, and
-    # an all-zero/null signature would otherwise band every short doc into
-    # one spurious O(n^2) near-dup clique (and one hot key).
-    grams_df = grams_df.filter(F.size("_grams") > 0)
-    banded = grams_df.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.concat_ws("|", F.lit(str(b)), *[F.col("_sig")[b * rows_per_band + r] for r in range(rows_per_band)])
-                for b in range(bands)
-            ])
-        ).alias("_band_key"),
-    )
-    banded = _cap_band_size(banded, "_band_key", max_band_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, on="_band_key")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ga = grams_df.select(F.col("_id").alias("id_a"), F.col("_grams").alias("_ga"))
-    gb = grams_df.select(F.col("_id").alias("id_b"), F.col("_grams").alias("_gb"))
+    cand = _band_pairs(_minhash_bands(signed, num_hashes, bands), max_band_size)
+    ga = signed.select(F.col("_id").alias("id_a"), F.col("_grams").alias("_ga"))
+    gb = signed.select(F.col("_id").alias("id_b"), F.col("_grams").alias("_gb"))
     pairs = (
         cand.join(ga, "id_a")
         .join(gb, "id_b")
@@ -430,68 +444,22 @@ def minhash_estimate_audit(
     Candidates are banding survivors, so estimates are biased >=
     rows_per_band/num_hashes by construction — the audit measures accuracy
     ON THE OPERATING REGION, which is the relevant question. Plan shape is
-    the candidate half of minhash_lsh_candidates (one persisted shingle
-    pass, one persisted signature frame, band self-join with flood caps);
-    the exact side joins shingle arrays back for the candidate set only.
+    the candidate half of minhash_lsh_candidates (one persisted (id, grams,
+    sig) frame, band self-join with flood caps); each candidate side joins
+    that frame back once, carrying signature and shingle arrays together.
 
     Output: (id_a, id_b, est_jaccard, exact_jaccard, abs_err).
     """
-    rows_per_band = num_hashes // bands
-    base = _ensure_parallelism(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
+    signed = _persist_nonempty(
+        _minhash_signed(df, id_col, text_col, num_hashes, ngram), F.size("_grams") > 0
     )
-    toked = base.select("_id", tokens(normalized_text(F.col("_text"))).alias("_toks"))
-    # One persisted (id, grams, sig) frame — the same single-barrier shape
-    # as minhash_lsh_candidates: band keys, the estimate's signature
-    # columns, and the exact verify's shingle arrays are all served from
-    # one cache (band-key derivation re-explodes the cached signature per
-    # consumer, a trivial concat per row vs the md5 pass it replaces).
-    n_blocks = (num_hashes + 7) // 8
-    grams_df = persist_tracked(
-        toked.select("_id", shingles_from_tokens(F.col("_toks"), ngram).alias("_grams"))
-        .select(
-            "_id",
-            "_grams",
-            *[_minhash_digests(F.col("_grams"), b).alias(f"_digs{b}") for b in range(n_blocks)],
-        )
-        .select(
-            "_id",
-            "_grams",
-            F.array(
-                *[
-                    _minhash_component_from_digests(F.col(f"_digs{i // 8}"), i % 8)
-                    for i in range(num_hashes)
-                ]
-            ).alias("_sig"),
-        )
+    cand = _band_pairs(_minhash_bands(signed, num_hashes, bands), max_band_size)
+    sa = signed.select(
+        F.col("_id").alias("id_a"), F.col("_sig").alias("_sa"), F.col("_grams").alias("_ga")
     )
-    grams_df.count()
-    grams_df = grams_df.filter(F.size("_grams") > 0)
-    sig = grams_df
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.concat_ws(
-                    "|", F.lit(str(b)),
-                    *[F.col("_sig")[b * rows_per_band + r] for r in range(rows_per_band)],
-                )
-                for b in range(bands)
-            ])
-        ).alias("_band_key"),
+    sb = signed.select(
+        F.col("_id").alias("id_b"), F.col("_sig").alias("_sb"), F.col("_grams").alias("_gb")
     )
-    banded = _cap_band_size(banded, "_band_key", max_band_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, on="_band_key")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sa"))
-    sb = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sb"))
-    ga = grams_df.select(F.col("_id").alias("id_a"), F.col("_grams").alias("_ga"))
-    gb = grams_df.select(F.col("_id").alias("id_b"), F.col("_grams").alias("_gb"))
     n_eq = F.size(
         F.filter(
             F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
@@ -503,8 +471,6 @@ def minhash_estimate_audit(
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .join(ga, "id_a")
-        .join(gb, "id_b")
         .select(
             "id_a",
             "id_b",
@@ -515,91 +481,7 @@ def minhash_estimate_audit(
     )
 
 
-# ---------------------------------------------------------------- SimHash
-
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over whitespace tokens (xxhash64 token hashes).
-
-    Classic construction: each token votes ±1 per bit of its 64-bit hash; the
-    signature's bit i is 1 iff the summed vote is positive. Pure JVM
-    expressions (transform/aggregate over a 64-slot array) — map-only.
-    Not oracle-portable (xxhash64 is Spark-specific); validated in pytest
-    against a Python reference implementation instead.
-    """
-    toks = F.array_distinct(tokens(normalized_text(text)))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    # Unrolled over the 64 bit positions (shiftright needs a literal int);
-    # each vote is one fold over the token-hash array.
-    def bit_vote(i: int):
-        # closure factory: pyspark requires the merge lambda to take exactly
-        # two parameters, so `i` must be captured, not a default arg
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    sig = F.lit(0).cast("long")
-    for i in range(64):
-        vote = F.aggregate(hashes, F.lit(0), bit_vote(i))
-        sig = sig + F.when(vote > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")).otherwise(0)
-    return sig
-
-
-def simhash_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    band_bits: int = 16,
-    max_hamming: int | None = 3,
-    max_band_size: int | None = None,
-) -> DataFrame:
-    """SimHash near-dup pairs: banding on 64/band_bits signature slices
-    generates candidates; ``max_hamming`` filters them to true near-dups.
-
-    With 4 bands of 16 bits, any pair within Hamming distance 3 differs in at
-    most 3 bands, so by pigeonhole it shares at least one band — banding has
-    EXACT recall for the default cut. The Hamming cut itself matters on
-    low-entropy corpora (small shared vocabulary): banding alone admits many
-    weak candidates because common tokens dominate every signature.
-    Output: (id_a, id_b, hamming)."""
-    n_bands = 64 // band_bits
-    # Token count rides along so the degenerate-doc filter (token-less docs
-    # all share the identical all-zero signature — a spurious O(n^2)
-    # hamming-0 clique and a hot band key) runs AFTER the cache; a filter
-    # inside the cached plan would be pushed below the repartition and
-    # serialize signature building onto the scan's single partition.
-    sig = persist_tracked(
-        _ensure_parallelism(df).select(
-            F.col(id_col).alias("_id"),
-            F.size(tokens(normalized_text(F.col(text_col)))).alias("_nt"),
-            simhash64(F.col(text_col)).alias("_sh"),
-        )
-    )
-    sig.count()
-    sig = sig.filter(F.col("_nt") > 0).select("_id", "_sh")
-    mask = (1 << band_bits) - 1
-    banded = sig.select(
-        "_id",
-        "_sh",
-        F.explode(
-            F.array(*[
-                F.concat_ws("|", F.lit(str(b)), (F.shiftright("_sh", b * band_bits).bitwiseAND(F.lit(mask))).cast("string"))
-                for b in range(n_bands)
-            ])
-        ).alias("_band_key"),
-    )
-    banded = _cap_band_size(banded, "_band_key", max_band_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    hamming = F.bit_count(F.col("a._sh").bitwiseXOR(F.col("b._sh")))
-    pairs = (
-        a.join(b, on="_band_key")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"), hamming.alias("hamming"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if max_hamming is not None:
-        pairs = pairs.filter(F.col("hamming") <= max_hamming)
-    return pairs
-
+# ---------------------------------------------------------------- decontamination
 
 def decontaminate_hits(
     corpus: DataFrame,
@@ -642,15 +524,16 @@ def decontaminate_hits(
     )
 
 
+# ---------------------------------------------------------------- SimHash
+
 def simhash_bits_from_digests(digests: Column, nibbles: int = 32) -> Column:
     """Portable SimHash signature as a ``nibbles``-char bitstring.
 
     Bit i's vote per token: +1 when hex nibble i of the token's md5 digest
     has its top bit set (hex char >= '8' — digits sort before letters in
     ASCII so the comparison is exact), -1 otherwise; signature char i is '1'
-    iff the summed vote is positive. Unlike xxhash64-based ``simhash64``
-    this construction is plain ANSI SQL (substr over md5 hex), so the DuckDB
-    oracle reproduces it bit for bit.
+    iff the summed vote is positive. The construction is plain ANSI SQL
+    (substr over md5 hex), so the DuckDB oracle reproduces it bit for bit.
     """
 
     def vote(i: int):
@@ -677,9 +560,10 @@ def simhash_md5_candidates(
 ) -> DataFrame:
     """Oracle-portable SimHash near-dup pairs: 32-bit md5-nibble signature
     over word ``ngram`` shingles, bands of ``band_chars`` bitstring chars
-    generate candidates, Hamming cut filters to true near-dups. Same
-    banding/verify shape as ``simhash_candidates`` (the xxhash64 fast path);
-    see that docstring for the recall argument. Shingles (not unigrams) are
+    generate candidates, Hamming cut filters to true near-dups. With 2 bands
+    of 16 bits, any pair within Hamming distance 1 shares a band by
+    pigeonhole; the Hamming cut itself matters on low-entropy corpora, where
+    banding alone admits many weak candidates. Shingles (not unigrams) are
     the feature set: on low-entropy corpora shared vocabulary makes unigram
     votes collapse to near-identical signatures. Output: (id_a, id_b, hamming).
 
@@ -693,29 +577,18 @@ def simhash_md5_candidates(
     # vote folds; CollapseProject keeps the md5 transform from inlining 32x.
     digs = toked.select(
         "_id",
-        F.transform(
-            shingles_from_tokens(F.col("_toks"), ngram), lambda t: F.md5(t)
-        ).alias("_digs"),
+        _minhash_digests(shingles_from_tokens(F.col("_toks"), ngram), 0).alias("_digs"),
     )
-    # The shingle count rides along in the persisted frame so the
-    # degenerate-doc filter runs AFTER the cache: a filter inside the cached
-    # plan would be pushed below the repartition, serializing the whole
-    # signature computation onto the 1-partition scan side (see
-    # minhash_lsh_candidates). Cache materialized eagerly so the self-join's
-    # concurrent broadcast-build futures reuse it instead of recomputing.
-    sig = persist_tracked(
+    # The shingle count rides along so shingle-less docs (whose empty digest
+    # array sums every vote to 0) are dropped after the cache.
+    sig = _persist_nonempty(
         digs.select(
             "_id",
             F.size("_digs").alias("_ng"),
             simhash_bits_from_digests(F.col("_digs"), nibbles).alias("_sig"),
-        )
-    )
-    sig.count()
-    # Shingle-less docs are dropped BEFORE banding: their empty digest array
-    # sums every vote to 0, so they would all share the identical all-zero
-    # signature — a spurious O(n^2) hamming-0 'near-dup' clique of short
-    # docs, and one pathologically hot band key at scale.
-    sig = sig.filter(F.col("_ng") > 0).select("_id", "_sig")
+        ),
+        F.col("_ng") > 0,
+    ).select("_id", "_sig")
     banded = sig.select(
         "_id",
         "_sig",
@@ -728,24 +601,13 @@ def simhash_md5_candidates(
             ])
         ).alias("_band_key"),
     )
-    banded = _cap_band_size(banded, "_band_key", max_band_size)
-    a, b = banded.alias("a"), banded.alias("b")
     ham = F.size(
         F.filter(
             F.sequence(F.lit(1), F.lit(nibbles)),
             lambda i: F.col("a._sig").substr(i, F.lit(1)) != F.col("b._sig").substr(i, F.lit(1)),
         )
     )
-    pairs = (
-        a.join(b, on="_band_key")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    pairs = _band_pairs(banded, max_band_size, ham.alias("hamming"))
     if max_hamming is not None:
         pairs = pairs.filter(F.col("hamming") <= max_hamming)
     return pairs
@@ -1404,41 +1266,9 @@ def minhash_band_keys(
     explode); no persist — index builders write the result, probe
     callers broadcast their (small) side. Docs with no shingles emit no
     rows (no n-gram evidence — callers decide the policy for them).
-    Signature construction is bit-identical to minhash_lsh_candidates,
-    so an index built here agrees with the pair pipeline's banding.
+    Signature and band keys come from the same _minhash_signed and
+    _minhash_bands as minhash_lsh_candidates, so an index built here agrees
+    with the pair pipeline's banding.
     """
-    rows_per_band = num_hashes // bands
-    base = _ensure_parallelism(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-    )
-    toked = base.select("_id", tokens(normalized_text(F.col("_text"))).alias("_toks"))
-    grams = toked.select(
-        "_id", shingles_from_tokens(F.col("_toks"), ngram).alias("_grams")
-    ).filter(F.size("_grams") > 0)
-    n_blocks = (num_hashes + 7) // 8
-    digs = grams.select(
-        "_id",
-        *[_minhash_digests(F.col("_grams"), b).alias(f"_digs{b}") for b in range(n_blocks)],
-    )
-    sig = digs.select(
-        "_id",
-        F.array(
-            *[
-                _minhash_component_from_digests(F.col(f"_digs{i // 8}"), i % 8)
-                for i in range(num_hashes)
-            ]
-        ).alias("_sig"),
-    )
-    return sig.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.concat_ws(
-                    "|",
-                    F.lit(str(b)),
-                    *[F.col("_sig")[b * rows_per_band + r] for r in range(rows_per_band)],
-                )
-                for b in range(bands)
-            ])
-        ).alias("_band_key"),
-    )
+    signed = _minhash_signed(df, id_col, text_col, num_hashes, ngram)
+    return _minhash_bands(signed.filter(F.size("_grams") > 0), num_hashes, bands)

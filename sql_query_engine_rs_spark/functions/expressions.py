@@ -1,11 +1,12 @@
-"""v0 expression surface: literals, column refs, binary ops, casts.
+"""v0 expression surface: literals, column refs, binary ops.
 
 Reference expression IR: BoundExpr ∈ {Constant, ColumnRef, InputRef,
 BinaryOp, TypeCast, AggFunc} (src/binder/expression/mod.rs:16-24). Catalyst's
 analyzer already performs attribute resolution (InputRef) and implicit numeric
 widening (the reference inserts BoundTypeCast by hand,
-src/binder/expression/binary_op.rs:27-63), so this module is mostly a typed
-veneer that documents parity.
+src/binder/expression/binary_op.rs:27-63), and explicit casts are plain
+``Column.cast``, so this module is mostly a typed veneer that documents
+parity.
 """
 
 from __future__ import annotations
@@ -32,10 +33,6 @@ BINARY_OPS = {
     "or": Column.__or__,    # reference: todo!() at runtime
 }
 
-# Reference scalar types (src/types/mod.rs:22-35) -> Spark cast targets.
-CAST_TYPES = {"boolean": "boolean", "int32": "int", "int64": "bigint", "float64": "double", "string": "string"}
-
-
 def lit(value) -> Column:
     """Literal. Python ints map to Spark int/bigint following the reference's
     i32 -> i64 -> f64 parse ladder (src/types/mod.rs:127-137) — Spark's
@@ -47,11 +44,6 @@ def binary_op(op: str, left: Column, right: Column) -> Column:
     """Typed binary op; Catalyst inserts the widening casts the reference
     builds manually (src/binder/expression/binary_op.rs:27-63)."""
     return BINARY_OPS[op](left, right)
-
-
-def type_cast(expr: Column, to: str) -> Column:
-    """Explicit cast (reference BoundTypeCast, src/binder/expression/mod.rs:53-58)."""
-    return expr.cast(CAST_TYPES.get(to, to))
 
 
 def portable_round(c: Column, n: int = 2) -> Column:

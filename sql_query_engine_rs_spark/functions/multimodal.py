@@ -34,7 +34,6 @@ from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -135,20 +134,6 @@ def reset_codec(kind: str | None = None) -> None:
         _CODECS.update(_DEFAULT_CODECS)
     else:
         _CODECS[kind] = _DEFAULT_CODECS[kind]
-
-
-def attach_media_meta(df: DataFrame, payload_col: str, media_type: str, fmt: str) -> DataFrame:
-    """Wrap a binary column with the typed metadata struct (map-only)."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-        ),
-    )
 
 
 def image_features(df: DataFrame, id_col: str = "item_id", payload_col: str = "payload") -> DataFrame:

@@ -14,8 +14,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -37,14 +35,3 @@ def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 def token_count_udf(text: pd.Series) -> pd.Series:
     """Whitespace token count, vectorized via pandas str ops."""
     return text.str.split().str.len().fillna(0).astype("int32")
-
-
-@pandas_udf("double")
-def l2_norm_udf(a: pd.Series) -> pd.Series:
-    am = np.stack(a.apply(np.asarray, dtype=np.float64))
-    return pd.Series(np.linalg.norm(am, axis=1))
-
-
-def cosine_pandas(a: Column, b: Column) -> Column:
-    """Drop-in for ``similarity.cosine`` using the Pandas-UDF path."""
-    return cosine_udf(a, b)

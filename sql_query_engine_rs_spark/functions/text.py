@@ -62,11 +62,6 @@ def marker_hits_from(toks_lower: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks_lower, lambda t: F.array_contains(arr, t)))
 
 
-def marker_hits(text: Column, markers: tuple[str, ...]) -> Column:
-    """How many tokens of ``text`` are in the marker set."""
-    return marker_hits_from(tokens(F.lower(text)), markers)
-
-
 def lang_id_from(toks_lower: Column) -> Column:
     """Heuristic language ID from a pre-tokenized lowercase array: argmax of
     marker-word hit counts, 'und' when no marker hits. Deterministic
@@ -80,13 +75,6 @@ def lang_id_from(toks_lower: Column) -> Column:
         best_lang = F.when(take, F.lit(code)).otherwise(best_lang)
         best_hits = F.when(take, hits).otherwise(best_hits)
     return best_lang
-
-
-def lang_id(text: Column) -> Column:
-    """Heuristic language ID over raw text. When combining with other token
-    statistics, materialize ``tokens(F.lower(text))`` once in a projection
-    and use ``lang_id_from`` — tokenization dominates the cost."""
-    return lang_id_from(tokens(F.lower(text)))
 
 
 def quality_score_from(text: Column, toks_lower: Column) -> Column:
@@ -111,12 +99,6 @@ def quality_score_from(text: Column, toks_lower: Column) -> Column:
     )
 
 
-def quality_score(text: Column) -> Column:
-    """Quality heuristic over raw text (token counts are case-insensitive,
-    so lowercase tokens serve both the stopword and size terms)."""
-    return quality_score_from(text, tokens(F.lower(text)))
-
-
 def normalized_text(text: Column) -> Column:
     """Canonical form for fingerprinting: lowercase, collapse whitespace, trim."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
@@ -130,25 +112,6 @@ def fingerprint(text: Column) -> Column:
     ``F.xxhash64`` is ~2× faster; swap freely.
     """
     return F.md5(normalized_text(text))
-
-
-def text_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One row per document: token counts, detected language, quality score,
-    fingerprint. A single map-only projection — no shuffle."""
-    t = F.col(text_col)
-    toked = df.select(
-        F.col(id_col), t.alias("_text"), tokens(F.lower(t)).alias("_toks")
-    )
-    txt = F.col("_text")
-    return toked.select(
-        F.col(id_col),
-        F.length(txt).alias("n_chars"),
-        F.size(F.col("_toks")).alias("n_tokens"),
-        bpe_ish_token_count(txt).alias("n_subword_tokens"),
-        lang_id_from(F.col("_toks")).alias("lang_detected"),
-        quality_score_from(txt, F.col("_toks")).alias("quality"),
-        fingerprint(txt).alias("fingerprint"),
-    )
 
 
 def ngram_repetition_from_tokens(toks: Column, n: int) -> Column:
@@ -182,24 +145,19 @@ def ngram_repetition(text: Column, n: int) -> Column:
     return ngram_repetition_from_tokens(tokens(normalized_text(text)), n)
 
 
-def char_shingle_sketch(text: Column, k: int = 5, sketch_size: int = 4) -> Column:
+def char_shingle_sketch_from_norm(norm: Column, k: int = 5, sketch_size: int = 4) -> Column:
     """Winnowing-style document sketch: the ``sketch_size`` smallest md5
-    hashes of the character ``k``-grams of the normalized text.
+    hashes of the character ``k``-grams of pre-normalized text ``norm``.
 
     A rolling-fingerprint selection (Schleimer et al.'s winnowing picks
     per-window minima; taking the global bottom-``sketch_size`` is the
     order-free variant that needs no window state): near-identical documents
     share most of their minimum shingle hashes, so equal sketch elements
     are a cheap containment signal. md5 keeps it engine-portable.
-    """
-    return char_shingle_sketch_from_norm(normalized_text(text), k, sketch_size)
 
-
-def char_shingle_sketch_from_norm(norm: Column, k: int = 5, sketch_size: int = 4) -> Column:
-    """``char_shingle_sketch`` taking pre-normalized text. ``norm`` is
-    captured inside the per-character lambda below, so pass a projected
-    COLUMN — a regex-normalize expression here would be re-evaluated once
-    per character position (O(L^2) regex per doc)."""
+    ``norm`` is captured inside the per-character lambda below, so pass a
+    projected COLUMN — a regex-normalize expression here would be
+    re-evaluated once per character position (O(L^2) regex per doc)."""
     n = F.length(norm)
     idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
     grams = F.transform(idx, lambda i: norm.substr(i, F.lit(k)))

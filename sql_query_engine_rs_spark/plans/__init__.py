@@ -50,13 +50,6 @@ def pushed_filters(df: DataFrame) -> str:
     return "\n".join(line.strip() for line in plan.splitlines() if "PushedFilters" in line)
 
 
-def assert_pushdown(df: DataFrame, fragment: str) -> None:
-    """Raise if ``fragment`` (e.g. a column name) is not in PushedFilters."""
-    pf = pushed_filters(df)
-    if fragment not in pf:
-        raise AssertionError(f"expected pushed filter containing {fragment!r}, got: {pf!r}")
-
-
 def uses_broadcast(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df, "simple")
 

@@ -301,11 +301,6 @@ def r2(c):  # rounded double aggregate, the cross-engine float convention
     return pround(c, 2)
 
 
-def rsql(expr: str, n: int = 2) -> str:
-    """SQL twin of ``pround`` for the DuckDB oracles."""
-    return f"FLOOR(({expr}) * {10 ** n} + 0.5) / {10 ** n}"
-
-
 # Bucket count for the two-level exact order-statistic pattern below.
 # Fixed (not N-derived) so the cross-bucket offset window is a CONSTANT
 # 256-row frame at any corpus size — the bounded-window whitelist
@@ -2167,12 +2162,12 @@ def pipe_partitioned_write_prune(spark, sf_dir):
     table under the same predicate — identical results prove the
     round-trip loses nothing (partition columns come back typed as
     written via the string-cast convention). Write targets a per-build
-    temp dir (overwrite mode), same discipline as pipe_ann_ivf_bucketed."""
-    import tempfile
+    temp dir (caching.tracked_temp_dir), removed by release_caches()."""
+    from sql_query_engine_rs_spark.functions.caching import tracked_temp_dir
+    from sql_query_engine_rs_spark.sources import write
 
     d = t(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="part_prune_")
-    from sql_query_engine_rs_spark.sources import write
+    path = tracked_temp_dir("part_prune_")
 
     write(d, "parquet", path, partition_by=["lang"])
     back = spark.read.parquet(path).filter(F.col("lang") == "en")
@@ -2388,10 +2383,10 @@ def pipe_schema_evolution(spark, sf_dir):
     file counts pin the schema explicitly and evolve via the catalog,
     which this audit is the precursor to. Shards are written to a
     per-build temp dir, same discipline as pipe_partitioned_write_prune."""
-    import tempfile
+    from sql_query_engine_rs_spark.functions.caching import tracked_temp_dir
 
     d = t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="schema_evo_")
+    base = tracked_temp_dir("schema_evo_")
     old = d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars")
     new = d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "n_chars", "lang", "source")
     old.write.mode("overwrite").parquet(base + "/shard_old")
@@ -2586,13 +2581,12 @@ def pipe_source_overlap(spark, sf_dir):
     )
 
 
-def _minhash_oracle(
-    num_hashes: int = 8,
-    bands: int = 2,
-    threshold: float = 0.8,
-    max_band_size: int = 256,
-    source: str = "documents",
-) -> str:
+def _minhash_sql_parts(
+    num_hashes: int, bands: int, max_band_size: int
+) -> tuple[str, str, str, str, str]:
+    """DuckDB fragments shared by the MinHash oracles: signature components
+    h0..h{num_hashes-1}, band keys b*, band bucket counts n*, the capped
+    band match between sides ``a``/``b``, and the exact shingle Jaccard."""
     rows = num_hashes // bands
     # component i = min over shingles of hex chars [4*(i%8), 4*(i%8)+4) of the
     # block-(i//8) digest (block 0 unsalted) — mirrors dedup._minhash_digests
@@ -2616,6 +2610,19 @@ def _minhash_oracle(
     jac = (
         "len(list_intersect(a.grams, b.grams)) / "
         "GREATEST(len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)), 1)"
+    )
+    return comps, band_keys, band_counts, band_match, jac
+
+
+def _minhash_oracle(
+    num_hashes: int = 8,
+    bands: int = 2,
+    threshold: float = 0.8,
+    max_band_size: int = 256,
+    source: str = "documents",
+) -> str:
+    comps, band_keys, band_counts, band_match, jac = _minhash_sql_parts(
+        num_hashes, bands, max_band_size
     )
     return f"""WITH d AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM {source}),
         g AS (SELECT doc_id, {_GRAMS_SQL} AS grams FROM d),
@@ -2886,9 +2893,8 @@ def _simhash_oracle(
 @register("pipe_simhash", _simhash_oracle())
 def pipe_simhash(spark, sf_dir):
     """SimHash-banded near-dup pairs (Hamming blocking + cut), md5-nibble
-    construction so the DuckDB oracle reproduces the bits exactly. The
-    xxhash64 fast path (``dedup.simhash_candidates``) computes the same
-    shape ~2x faster and is validated in pytest against a Python reference.
+    construction so the DuckDB oracle reproduces the bits exactly; the
+    banding, flood cap and self-join are the MinHash path's (dedup._band_pairs).
     max_band_size=256 caps flood band buckets exactly as in
     pipe_minhash_lsh (oracle mirrors it via per-key window counts);
     output-neutral at test SFs, skew-safe at scale."""
@@ -3889,7 +3895,8 @@ def pipe_token_count(spark, sf_dir):
         FROM documents""",
 )
 def pipe_text_stats(spark, sf_dir):
-    """Combined per-doc text profile (subset of text_stats with portable cols)."""
+    """Combined per-doc text profile: characters, whitespace tokens and the
+    normalized-text fingerprint (the engine-portable per-doc columns)."""
     d = docs_parallel(spark, sf_dir)
     txt = F.col("text")
     return d.select(
@@ -5939,14 +5946,10 @@ def pipe_ann_ivf_bucketed(spark, sf_dir):
     deterministic codebook, same results, same DuckDB oracle as
     pipe_ann_ivf; this entry puts the batch-ANN storage path (the shape for
     probe sets too large to broadcast) under the driver hash gate."""
-    import uuid
-
     from sql_query_engine_rs_spark.functions.similarity import (
         ivf_topk_bucketed,
         ivf_write_bucketed,
     )
-
-    import tempfile
 
     emb = t(spark, sf_dir, "embeddings")
     table = f"ivf_corpus_{uuid.uuid4().hex[:8]}"
@@ -5960,6 +5963,7 @@ def pipe_ann_ivf_bucketed(spark, sf_dir):
         ).localCheckpoint(eager=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+        shutil.rmtree(path, ignore_errors=True)
     return result
 
 
@@ -8761,7 +8765,7 @@ def pipe_corpus_curation(spark, sf_dir):
     # applies on top of the cache: filtering on computed heavy columns
     # (quality, lang) would otherwise be pushed below the repartition and
     # run the whole scoring pipeline on the scan's single partition (see
-    # dedup.minhash_lsh_candidates for the same pattern + measurements).
+    # dedup._persist_nonempty for the same pattern + measurements).
     scored = persist_tracked(
         toked.select(
             "doc_id",
@@ -10695,29 +10699,11 @@ def pipe_zipf_slope(spark, sf_dir):
 def _minhash_est_oracle(
     num_hashes: int = 8, bands: int = 2, max_band_size: int = 256
 ) -> str:
-    rows = num_hashes // bands
-
-    def _comp(i: int) -> str:
-        arg = "g" if i // 8 == 0 else f"'{i // 8}:' || g"
-        return f"list_min(list_transform(grams, g -> substr(md5({arg}), {(i % 8) * 4 + 1}, 4))) AS h{i}"
-
-    comps = ",\n               ".join(_comp(i) for i in range(num_hashes))
-    band_keys = ",\n               ".join(
-        "concat_ws('|', '%d', %s) AS b%d" % (b, ", ".join(f"h{b * rows + r}" for r in range(rows)), b)
-        for b in range(bands)
-    )
-    band_counts = ",\n               ".join(
-        f"count(*) OVER (PARTITION BY b{b}) AS n{b}" for b in range(bands)
-    )
-    band_match = " OR ".join(
-        f"(a.b{b} = b.b{b} AND a.n{b} <= {max_band_size})" for b in range(bands)
+    comps, band_keys, band_counts, band_match, jac = _minhash_sql_parts(
+        num_hashes, bands, max_band_size
     )
     n_eq = " + ".join(
         f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(num_hashes)
-    )
-    jac = (
-        "len(list_intersect(a.grams, b.grams)) / "
-        "GREATEST(len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)), 1)"
     )
     return f"""WITH d AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
         g AS (SELECT doc_id, {_GRAMS_SQL} AS grams FROM d),
@@ -12666,9 +12652,9 @@ def pipe_bucketed_join_audit(spark, sf_dir):
     co-joined tables, because only equal bucket counts join exchange-free.
     Data files land in a per-build temp dir (table metadata is overwritten
     in the session catalog), same discipline as pipe_partitioned_write_prune."""
-    import tempfile
+    from sql_query_engine_rs_spark.functions.caching import tracked_temp_dir
 
-    base = tempfile.mkdtemp(prefix="bja_")
+    base = tracked_temp_dir("bja_")
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )

@@ -1,11 +1,9 @@
-"""Unit tests for the pipeline operators that have no SQL oracle:
-SimHash (vs a Python reference implementation), sign-LSH ANN (recall vs
-brute force), multimodal mapInPandas plumbing, and the as-of join operator
-against a hand-computed answer."""
+"""Unit tests for the pipeline operators beyond their SQL oracles:
+SimHash/MinHash banding edge cases, sign-LSH ANN (recall vs brute force),
+multimodal mapInPandas plumbing, and the as-of join operator against a
+hand-computed answer."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 from pyspark.sql import Row
@@ -19,42 +17,12 @@ from sql_query_engine_rs_spark.operators.join import asof_join
 
 # ---------------------------------------------------------------- simhash
 
-def xxhash64_via_spark(spark, tokens: list[str]) -> dict[str, int]:
-    rows = spark.createDataFrame([(t,) for t in tokens], "tok string").select(
-        "tok", F.xxhash64("tok").alias("h")
-    ).collect()
-    return {r.tok: r.h for r in rows}
-
-
-def python_simhash(token_hashes: list[int]) -> int:
-    """Reference construction: ±1 vote per bit, signed 64-bit result."""
-    sig = 0
-    for i in range(64):
-        vote = sum(1 if (h >> i) & 1 else -1 for h in token_hashes)
-        if vote > 0:
-            sig += (1 << i) if i < 63 else -(1 << 63)
-    return sig
-
-
-def test_simhash_matches_python_reference(spark):
-    texts = ["the quick brown fox", "pack my box with five dozen jugs", "spark hash agg join"]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {
-        r.doc_id: r.sh
-        for r in df.select("doc_id", D.simhash64(F.col("text")).alias("sh")).collect()
-    }
-    for i, text in enumerate(texts):
-        toks = sorted(set(text.split()))
-        hashes = xxhash64_via_spark(spark, toks)
-        assert got[i] == python_simhash(list(hashes.values())), f"doc {i}"
-
-
 def test_simhash_identical_docs_zero_hamming(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "alpha  beta gamma delta"), (3, "unrelated words entirely here")],
         "doc_id long, text string",
     )
-    pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_candidates(df, band_bits=16, max_hamming=None).collect()}
+    pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_md5_candidates(df, max_hamming=None).collect()}
     assert pairs.get((1, 2)) == 0  # whitespace-normalized duplicates
 
 
@@ -265,14 +233,24 @@ def test_minhash_band_cap_drops_flood_keeps_real_pairs(spark):
     assert not any(a < 1000 and b < 1000 for a, b in pairs)  # flood dropped
 
 
-def test_minhash_single_cache_barrier(spark):
-    """r12 internals pin: minhash_lsh_candidates materializes exactly ONE
-    tracked cache — the merged (id, grams, sig) frame — and every consumer
-    (band keys, cap counts, both self-join sides, both verify sides) reads
-    it as an InMemoryTableScan. The pre-r12 shape persisted a second banded
-    frame (a second eager count job per query); a regression back to two
-    caches (or to zero, recomputing the md5 pass per consumer) changes the
-    tracked-cache count or drops the in-memory scans."""
+@pytest.mark.parametrize(
+    "build, min_scans",
+    [
+        # band self-join (2 sides) + cap count + cap join-back + verify joins (2)
+        (lambda d: D.minhash_lsh_candidates(d, verify_threshold=0.5, max_band_size=256), 5),
+        # the same candidates + one signature/shingle join-back per side
+        (lambda d: D.minhash_estimate_audit(d, max_band_size=256), 5),
+        # band self-join (2 sides) + cap count + cap join-back
+        (lambda d: D.simhash_md5_candidates(d, max_hamming=None, max_band_size=256), 4),
+    ],
+    ids=["minhash_lsh_candidates", "minhash_estimate_audit", "simhash_md5_candidates"],
+)
+def test_minhash_single_cache_barrier(spark, build, min_scans):
+    """Each banded pair generator materializes exactly ONE tracked cache —
+    its signature frame — and every consumer (band keys, cap counts, both
+    self-join sides, the join-backs) reads it as an InMemoryTableScan. A
+    second cache would cost a second eager count job per query; zero would
+    recompute the hash pass per consumer."""
     from sql_query_engine_rs_spark.functions import caching as C
     from sql_query_engine_rs_spark.plans import explain_str
 
@@ -281,15 +259,44 @@ def test_minhash_single_cache_barrier(spark):
         "doc_id long, text string",
     )
     before = len(C._LIVE_CACHES)
-    pairs = D.minhash_lsh_candidates(
-        docs, num_hashes=8, bands=2, ngram=3, verify_threshold=0.5, max_band_size=256
-    )
+    pairs = build(docs)
     assert len(C._LIVE_CACHES) - before == 1, "expected exactly one tracked cache"
-    simple = explain_str(pairs, "simple")
-    # band self-join (2 sides) + cap count + cap join-back + verify joins (2)
-    assert simple.count("InMemoryTableScan") >= 5
-    pairs.collect()
+    assert explain_str(pairs, "simple").count("InMemoryTableScan") >= min_scans
+    assert pairs.count() > 0
     C.release_caches()
+
+
+def test_minhash_band_keys_match_candidate_banding(spark):
+    """minhash_band_keys is the index form of minhash_lsh_candidates'
+    banding: on a planted corpus, the doc pairs that share a band key are
+    exactly the unverified, uncapped candidate pairs."""
+    base = "the quick brown fox jumps over the lazy dog near the quiet river bank"
+    texts = [
+        base,
+        "The quick  brown fox" + base[19:],  # normalizes to 0
+        base + " today",                      # near-dup of 0
+        "an entirely different sentence about distributed query planning engines",
+        "an entirely different sentence about distributed query planning systems",
+        "short",                              # no 3-gram shingles: no keys, no pairs
+    ] + [f"filler document number {i} with its own words w{i} x{i} y{i}" for i in range(20)]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    keys = D.minhash_band_keys(df)
+    a, b = keys.alias("a"), keys.alias("b")
+    shared = {
+        (r.id_a, r.id_b)
+        for r in a.join(b, "_band_key")
+        .filter(F.col("a._id") < F.col("b._id"))
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .distinct()
+        .collect()
+    }
+    candidates = {
+        (r.id_a, r.id_b)
+        for r in D.minhash_lsh_candidates(df, verify_threshold=None).collect()
+    }
+    assert shared == candidates
+    assert {(0, 1), (0, 2), (1, 2)} <= candidates
+    assert not any(5 in p for p in candidates)
 
 
 def test_simhash_band_cap(spark):

@@ -2,7 +2,9 @@
 must leave the session as it found it — the scoped confs back at their
 prior values, no memory-sink view left registered, no stream still
 running, no temp directories left behind — and return rows that stay
-readable once its temp files are gone."""
+readable once its temp files are gone. Entries that write files and return
+a lazy read of them leave no temp directory once ``release_caches()`` has
+run."""
 
 from __future__ import annotations
 
@@ -57,3 +59,24 @@ def test_stream_build_leaves_no_trace(spark, sf_dir, tmp_path, monkeypatch, name
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# entries that write a per-build directory: one checkpoints its result and
+# removes it at once, three return a lazy read and register it for release
+WRITING_ENTRIES = [
+    "pipe_partitioned_write_prune",
+    "pipe_schema_evolution",
+    "pipe_ann_ivf_bucketed",
+    "pipe_bucketed_join_audit",
+]
+
+
+@pytest.mark.parametrize("name", WRITING_ENTRIES)
+def test_written_dirs_removed_on_release(spark, sf_dir, tmp_path, monkeypatch, name):
+    from sql_query_engine_rs_spark.functions.caching import release_caches
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = QUERIES[name].build(spark, sf_dir)
+    assert df.count() > 0
+    release_caches()
+    assert sorted(p.name for p in tmp_path.iterdir()) == []
