@@ -144,42 +144,10 @@ def _worker_fns():
 _as_matrix, _strict_scores, _argbest, _chunks = _worker_fns()
 
 
-def _collect_codebook(centroids: DataFrame, cid_col: str, cvec_col: str):
-    """Driver-side (cids asc int64, matrix float64, cid StructField) from
-    a k-bounded codebook frame — the same rows ``F.broadcast`` shipped
-    before.
-
-    Guarded at ``CODEBOOK_COLLECT_MAX`` rows: the limit(max+1) collect
-    bounds driver memory even when the guard fires (a k≈10⁶ codebook
-    never materializes — at most max+1 rows land before the raise), and
-    the error names the documented distributed route (coarse two-level
-    assign + bucketed fine-codebook join; see the constant's comment).
-
-    Fast path: a frame built by ``similarity._local_codebook_df`` already
-    holds its (cid, vector) rows driver-side (it was BUILT from a driver
-    round-trip — the Lloyd loop's k-bounded means); re-collecting them
-    through a Spark job is pure scheduler overhead, so the rows ride an
-    attribute on the DataFrame and are reused directly. Guarded on the
-    exact (cid, vec) column layout the attribute describes.
-    """
-    field = centroids.schema[cid_col]
-    local = getattr(centroids, "_sgr_codebook_rows", None)
-    if local is not None and getattr(centroids, "_sgr_codebook_cols", None) == (
-        cid_col,
-        cvec_col,
-    ):
-        if len(local) > CODEBOOK_COLLECT_MAX:
-            raise CodebookTooLarge(
-                f"codebook exceeds CODEBOOK_COLLECT_MAX={CODEBOOK_COLLECT_MAX} "
-                "rows; driver-side reuse refused — same bound as the collect "
-                "path (see arrow_kernels.py CODEBOOK_COLLECT_MAX)."
-            )
-        cids = np.array([c for c, _ in local], dtype=np.int64)
-        mat = np.array([list(v) for _, v in local], dtype=np.float64)
-        order = np.argsort(cids, kind="stable")
-        return cids[order], mat[order], field
-    rows = centroids.select(cid_col, cvec_col).limit(CODEBOOK_COLLECT_MAX + 1).collect()
-    if len(rows) > CODEBOOK_COLLECT_MAX:
+def check_codebook_size(n_rows: int) -> None:
+    """The one ``CODEBOOK_COLLECT_MAX`` guard: raise ``CodebookTooLarge``
+    for a codebook of ``n_rows`` rows instead of holding it driver-side."""
+    if n_rows > CODEBOOK_COLLECT_MAX:
         raise CodebookTooLarge(
             f"codebook exceeds CODEBOOK_COLLECT_MAX={CODEBOOK_COLLECT_MAX} rows; "
             "driver-side collect would not scale. Route through a coarse "
@@ -188,10 +156,51 @@ def _collect_codebook(centroids: DataFrame, cid_col: str, cvec_col: str):
             "join keyed on the coarse id — see arrow_kernels.py "
             "CODEBOOK_COLLECT_MAX."
         )
-    rows.sort(key=lambda r: r[0])
+
+
+def local_codebook(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """A k-bounded codebook as a LOCAL relation built from driver-resident
+    ``rows``, tagged with those rows and its column names so
+    ``codebook_rows`` reuses them without a collect job.
+
+    The Lloyd loops (``similarity.ivf_centroids``, ``pq_codebook``) end
+    every iteration with the book driver-side anyway — it was BUILT from
+    a driver round-trip — and every consumer (the next iteration's
+    assign, the corpus assignment, the query-probe broadcast) needs it
+    driver-side or broadcast; holding it as a local relation removes an
+    eager localCheckpoint barrier plus a re-collect job per consumer
+    (measured: pipe_ann_ivf ran 15 jobs for 2 corpus passes). Values are
+    exact: collected doubles round-trip bit-identically through
+    createDataFrame with an explicit array<double> schema."""
+    df = spark.createDataFrame(rows, schema=schema)
+    df._sgr_codebook = (rows, tuple(df.columns))
+    return df
+
+
+def codebook_rows(frame: DataFrame, cols) -> list:
+    """The ``cols`` rows of a k-bounded codebook frame, driver-side: the
+    tagged rows of a ``local_codebook`` frame with exactly these columns
+    (any transformation drops the tag), else one ``limit(max+1)`` collect
+    — driver memory stays bounded even when the guard fires (a k≈10⁶
+    codebook never materializes: at most max+1 rows land before the
+    raise)."""
+    tag = getattr(frame, "_sgr_codebook", None)
+    if tag is not None and tag[1] == tuple(cols):
+        rows = tag[0]
+    else:
+        rows = frame.select(*cols).limit(CODEBOOK_COLLECT_MAX + 1).collect()
+    check_codebook_size(len(rows))
+    return rows
+
+
+def _collect_codebook(centroids: DataFrame, cid_col: str, cvec_col: str):
+    """Driver-side (cids asc int64, matrix float64, cid StructField) from
+    a k-bounded codebook frame (``codebook_rows``) — the same rows
+    ``F.broadcast`` shipped before."""
+    rows = sorted(codebook_rows(centroids, (cid_col, cvec_col)), key=lambda r: r[0])
     cids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    return cids, mat, field
+    return cids, mat, centroids.schema[cid_col]
 
 
 def assign_nearest(

@@ -721,6 +721,7 @@ def embedding_cosine_dups_lsh(
     from sql_query_engine_rs_spark.functions.similarity import (
         dot,
         norm,
+        pair_cosine_guarded,
         random_hyperplane_signature,
     )
 
@@ -780,8 +781,6 @@ def embedding_cosine_dups_lsh(
     # extracting from a cast array re-runs the cast per getItem (O(d²)),
     # and per-element casts leave a method too large to JIT (the same
     # grave the kmeans unrolled-distance A/B found).)
-    from sql_query_engine_rs_spark.functions.arrow_kernels import pair_cosine
-
     # Crossover keys on the REP count — candidate volume scales with reps
     # after the collapse, so a clone-heavy corpus (say 400k rows, 20k
     # distinct vectors) belongs on the fold side. Cheap: vm is persisted.
@@ -827,24 +826,8 @@ def embedding_cosine_dups_lsh(
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
-            # zero-norm guard: under ANSI mode (on in this engine's
-            # sessions) an unguarded 0/0 would throw; when() evaluates
-            # the division only on non-degenerate pairs, the NULL
-            # cos_sim fails the >= filter, and the pair drops — the
-            # outcome the unguarded plan could only reach by luck in
-            # non-ANSI sessions.
-            portable_round(
-                F.when(
-                    F.col("a._n") * F.col("b._n") != 0,
-                    pair_cosine(
-                        F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")
-                    )
-                    if use_arrow_verify
-                    else dot(F.col("a._v"), F.col("b._v"))
-                    / (F.col("a._n") * F.col("b._n")),
-                ),
-                6,
-            ).alias("cos_sim"),
+            # a degenerate pair's NULL cos_sim fails the >= filter
+            portable_round(pair_cosine_guarded(use_arrow_verify), 6).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -1090,9 +1073,8 @@ def semdedup(
     """
     from sql_query_engine_rs_spark.functions.arrow_kernels import pair_cosine
     from sql_query_engine_rs_spark.functions.similarity import (
-        ivf_assign,
-        ivf_assign_two_level,
         ivf_centroids,
+        nearest_cell,
         norm,
     )
 
@@ -1114,15 +1096,10 @@ def semdedup(
     # within-cell pair scan folds one array per pair (the dot product), not
     # three — bit-identical to per-pair norms (same fold, hoisted), so the
     # DuckDB oracle needs no change
-    assign = ivf_assign_two_level if hierarchical_assign else (
-        lambda df, c, id_col, vec_col: ivf_assign(
-            df, c, nprobe=1, id_col=id_col, vec_col=vec_col
-        )
-    )
     cells = (
-        assign(
+        nearest_cell(
             _ensure_parallelism(corpus.select(id_col, vec_col)), cents,
-            id_col=id_col, vec_col=vec_col,
+            id_col, vec_col, hierarchical_assign,
         )
         .withColumn("_n", norm(F.col(vec_col)))
         .localCheckpoint(eager=True)

@@ -15,9 +15,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, IntegerType
 
 
-@pandas_udf("double")
+@pandas_udf(DoubleType())
 def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Batched cosine over two array<float> columns, float64 math.
 
@@ -31,7 +32,7 @@ def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(dots / norms)
 
 
-@pandas_udf("int")
+@pandas_udf(IntegerType())
 def token_count_udf(text: pd.Series) -> pd.Series:
     """Whitespace token count, vectorized via pandas str ops."""
     return text.str.split().str.len().fillna(0).astype("int32")

@@ -227,15 +227,64 @@ def lsh_topk(
 KNN_CLONE_COLLAPSE_TRIGGER = 4096
 
 
-def _knn_topk_direct(bkt: DataFrame, k: int, cos_pair) -> DataFrame:
-    """Score every within-bucket member pair of a prepared
-    (_id, _v, _n, bucket) frame and take the per-source top-k — the
-    healthy-bucket path of ``knn_graph`` (and the whole of the retained
-    ``_knn_graph_direct`` twin)."""
-    cos_expr = F.when(
-        F.col("a._n") * F.col("b._n") != 0,
-        cos_pair(F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")),
+def pair_cosine_guarded(arrow: bool) -> Column:
+    """cos(a._v, b._v) over a self-join of (_v vector, _n norm) frames
+    aliased ``a``/``b``, NULL where either norm is zero.
+
+    The guard is there for ANSI mode (on in this engine's sessions): an
+    unguarded 0/0 would throw, while ``when`` evaluates the division only
+    on non-degenerate pairs, so a zero vector's pairs get NULL and drop at
+    the caller's filter. ``arrow`` picks the kernel — the Arrow pair dot
+    (``arrow_kernels.pair_cosine``) or the in-place JVM fold ``dot`` —
+    and both are bit-exact, so the choice is invisible to outputs (see
+    ``dedup.PAIR_VERIFY_ARROW_MIN`` for the measured crossover)."""
+    from sql_query_engine_rs_spark.functions.arrow_kernels import pair_cosine
+
+    av, bv, an, bn = F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")
+    return F.when(
+        an * bn != 0, pair_cosine(av, bv, an, bn) if arrow else dot(av, bv) / (an * bn)
     )
+
+
+def _knn_buckets(
+    df: DataFrame, num_planes: int | None, id_col: str, vec_col: str
+) -> tuple[DataFrame, bool]:
+    """The persisted (_id, _v, _n, bucket) frame both ``knn_graph`` forms
+    self-join (``num_planes=None`` derives ceil(log2(N/64)) from one
+    count() probe), and whether N is past ``dedup.PAIR_VERIFY_ARROW_MIN``
+    (the kernel choice for ``pair_cosine_guarded``).
+
+    The frame is persisted because the self-join reads it on BOTH sides,
+    and an unpersisted bucket column would re-evaluate the signature pass
+    per side (2·N plane folds — measured +0.8 s per evaluation at sf0.1
+    after the Arrow signature swap). Callers materialize it."""
+    from sql_query_engine_rs_spark.functions.caching import persist_tracked
+    from sql_query_engine_rs_spark.functions.dedup import (
+        PAIR_VERIFY_ARROW_MIN,
+        auto_num_planes,
+    )
+
+    base = _ensure_parallelism(df)
+    n_vecs = base.count()
+    if num_planes is None:
+        num_planes = auto_num_planes(n_vecs)
+    bkt = persist_tracked(
+        base.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).alias("_v"),
+            norm(F.col(vec_col)).alias("_n"),
+            random_hyperplane_signature(F.col(vec_col), num_planes).alias("bucket"),
+        )
+    )
+    return bkt, n_vecs >= PAIR_VERIFY_ARROW_MIN
+
+
+def _knn_topk_direct(bkt: DataFrame, k: int, arrow: bool) -> DataFrame:
+    """Score every within-bucket member pair of a ``_knn_buckets`` frame
+    and take the per-source top-k — the healthy-bucket path of
+    ``knn_graph`` (and the whole of the retained ``_knn_graph_direct``
+    twin)."""
+    cos_expr = pair_cosine_guarded(arrow)
     a, b = bkt.alias("a"), bkt.alias("b")
     scored = (
         a.join(b, on="bucket")
@@ -322,28 +371,8 @@ def knn_graph(
     c² block.
     """
     from sql_query_engine_rs_spark.functions.caching import persist_tracked
-    from sql_query_engine_rs_spark.functions.dedup import auto_num_planes
 
-    base = _ensure_parallelism(df)
-    n_vecs = base.count()
-    if num_planes is None:
-        num_planes = auto_num_planes(n_vecs)
-    # Persist + materialize ONE (id, vec, norm, bucket) frame: the
-    # self-join below reads it on BOTH sides, and an unpersisted bucket
-    # column would re-evaluate the signature pass per side (2·N plane
-    # folds — measured +0.8 s per evaluation at sf0.1 after the Arrow
-    # signature swap, and a pure-waste double pass at any scale).
-    bkt = persist_tracked(
-        base.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            norm(F.col(vec_col)).alias("_n"),
-            random_hyperplane_signature(F.col(vec_col), num_planes).alias("bucket"),
-        )
-    )
-    from sql_query_engine_rs_spark.functions.arrow_kernels import pair_cosine
-    from sql_query_engine_rs_spark.functions.dedup import PAIR_VERIFY_ARROW_MIN
-
+    bkt, arrow = _knn_buckets(df, num_planes, id_col, vec_col)
     # One job materializes the persist AND probes the flood trigger: the
     # groupBy computes every partition of the persisted frame (populating
     # the cache as a side effect), so a separate bkt.count() materialization
@@ -353,13 +382,8 @@ def knn_graph(
         bkt.groupBy("bucket").agg(F.count(F.lit(1)).alias("_c")).agg(F.max("_c")).first()[0]
         or 0
     )
-    cos_pair = (
-        pair_cosine
-        if n_vecs >= PAIR_VERIFY_ARROW_MIN
-        else (lambda av, bv, an, bn: dot(av, bv) / (an * bn))
-    )
     if max_pop <= KNN_CLONE_COLLAPSE_TRIGGER:
-        return _knn_topk_direct(bkt, k, cos_pair)
+        return _knn_topk_direct(bkt, k, arrow)
 
     # Collapse-eligible = cos(v,v) provably rounds to 1.0 at 6dp: finite
     # nonzero norm, no NaN component. Everything else (zero vectors whose
@@ -401,13 +425,8 @@ def knn_graph(
         singles.select(F.col("_gid").alias("_id"), "_gid")
     )
 
-    # zero-norm guard (matches embedding_cosine_dups_lsh): under ANSI
-    # mode the unguarded 0/0 would throw; a degenerate vector's pairs get
-    # NULL cos_sim and are dropped below instead of crashing the graph.
-    cos_expr = F.when(
-        F.col("a._n") * F.col("b._n") != 0,
-        cos_pair(F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")),
-    )
+    # a degenerate vector's pairs get NULL cos_sim and drop below
+    cos_expr = pair_cosine_guarded(arrow)
     a, b = reps.alias("a"), reps.alias("b")
     pair_scored = (
         a.join(b, on="bucket")
@@ -468,31 +487,9 @@ def _knn_graph_direct(
     healthy-bucket path (shared ``_knn_topk_direct``), minus the
     bucket-population probe. Validation-only: not registered, not called
     by any query builder."""
-    from sql_query_engine_rs_spark.functions.caching import persist_tracked
-    from sql_query_engine_rs_spark.functions.dedup import auto_num_planes
-
-    base = _ensure_parallelism(df)
-    n_vecs = base.count()
-    if num_planes is None:
-        num_planes = auto_num_planes(n_vecs)
-    bkt = persist_tracked(
-        base.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            norm(F.col(vec_col)).alias("_n"),
-            random_hyperplane_signature(F.col(vec_col), num_planes).alias("bucket"),
-        )
-    )
+    bkt, arrow = _knn_buckets(df, num_planes, id_col, vec_col)
     bkt.count()
-    from sql_query_engine_rs_spark.functions.arrow_kernels import pair_cosine
-    from sql_query_engine_rs_spark.functions.dedup import PAIR_VERIFY_ARROW_MIN
-
-    cos_pair = (
-        pair_cosine
-        if n_vecs >= PAIR_VERIFY_ARROW_MIN
-        else (lambda av, bv, an, bn: dot(av, bv) / (an * bn))
-    )
-    return _knn_topk_direct(bkt, k, cos_pair)
+    return _knn_topk_direct(bkt, k, arrow)
 
 
 # ------------------------------------------------------------ IVF scale path
@@ -552,25 +549,60 @@ def _ivf_seed_rank(corpus: DataFrame, num_centroids: int, id_col: str = "vec_id"
     )
 
 
-def _local_codebook_df(spark, cb_rows: list[tuple[int, list[float]]]) -> DataFrame:
-    """(centroid_id int, _centroid array<double>) as a LOCAL relation from
-    driver-resident rows, tagged so ``arrow_kernels._collect_codebook``
-    reuses the rows without a collect job.
+_IVF_BOOK = "centroid_id int, _centroid array<double>"
+_PQ_BOOK = "m int, centroid_id int, _centroid array<double>"
 
-    This is the k-bounded half of the Lloyd loop's data movement done
-    once instead of three times: the per-iteration codebook is ≤
-    ``CODEBOOK_COLLECT_MAX`` rows (≈34 MB ceiling) and every consumer —
-    the next iteration's assign, the corpus assignment, the query-probe
-    broadcast — needs it driver-side or broadcast anyway. Holding it as
-    a local relation removes the eager localCheckpoint barrier + its
-    re-collect job per consumer (measured: pipe_ann_ivf ran 15 jobs for
-    2 corpus passes); the N-row corpus passes are untouched. Values are
-    exact: collected doubles round-trip bit-identically through
-    createDataFrame with an explicit array<double> schema."""
-    df = spark.createDataFrame(cb_rows, schema="centroid_id int, _centroid array<double>")
-    df._sgr_codebook_rows = cb_rows
-    df._sgr_codebook_cols = ("centroid_id", "_centroid")
-    return df
+
+def md5_seed_vectors(
+    corpus: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> list[list[float]]:
+    """The ``k`` corpus vectors (as double lists) with the smallest
+    md5(id), in md5 order — the stateless seed sample of every codebook
+    build (any executor, run or engine picks the same ones). ONE
+    TakeOrderedAndProject job collected straight to the driver: k is
+    codebook-bounded. Python's str ordering over lowercase hex equals
+    Spark's UTF8 ordering, so the driver-side sort is belt-and-braces
+    over the already-ordered take."""
+    rows = (
+        corpus.select(
+            F.md5(F.col(id_col).cast("string")).alias("_h"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        )
+        .orderBy("_h")
+        .limit(k)
+        .collect()
+    )
+    rows.sort(key=lambda r: r["_h"])
+    return [list(r["_v"]) for r in rows]
+
+
+def lloyd_means(assigned: DataFrame, keys: list[str], vec, out_col: str) -> DataFrame:
+    """(keys..., out_col array<double>): the element-wise mean of ``vec``
+    per ``keys`` group — the Lloyd update. posexplode is map-side and the
+    partial aggregation collapses it to ≤ groups·dim rows per partition
+    before the one (keys, pos)-keyed exchange, so vectors never shuffle;
+    the array reassembles in position order."""
+    return (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "_x"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("_x").alias("_x"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "_x"))), lambda s: s["_x"]
+            ).alias(out_col)
+        )
+    )
+
+
+def nearest_cell(
+    df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, two_level: bool
+) -> DataFrame:
+    """df + its nearest centroid_id: ``ivf_assign_two_level`` past the
+    caller's hierarchy crossover, else ``ivf_assign(nprobe=1)``."""
+    if two_level:
+        return ivf_assign_two_level(df, centroids, id_col=id_col, vec_col=vec_col)
+    return ivf_assign(df, centroids, nprobe=1, id_col=id_col, vec_col=vec_col)
 
 
 def ivf_centroids(
@@ -608,10 +640,10 @@ def ivf_centroids(
     callers with static oracles keep the default.
 
     Seed ranking routes on k, the same bound as every other codebook
-    collect: at k ≤ ``arrow_kernels.CODEBOOK_COLLECT_MAX`` the rank is a
-    GlobalLimit + one k-row row_number window — a single bounded task
-    over ≤65k vector rows (≈34 MB), executed once at build time behind
-    the eager localCheckpoint. Past the bound (the k≈10⁶ hierarchical
+    collect: at k ≤ ``arrow_kernels.CODEBOOK_COLLECT_MAX`` the seeds are
+    one ``md5_seed_vectors`` take of ≤65k vector rows (≈34 MB) held as a
+    ``local_codebook``, and each refined book goes back through
+    ``local_codebook`` too. Past the bound (the k≈10⁶ hierarchical
     regime, where one task would drag ~0.5 GB) ``_ivf_seed_rank``
     computes the identical ids two-level distributed — no GlobalLimit,
     no single-task window (bit-identity pinned in
@@ -620,6 +652,7 @@ def ivf_centroids(
     """
     from sql_query_engine_rs_spark.functions.arrow_kernels import (
         CODEBOOK_COLLECT_MAX,
+        local_codebook,
     )
 
     # the un-repartitioned input: the seed take is a per-partition top-k +
@@ -628,12 +661,14 @@ def ivf_centroids(
     # job (the global md5 rank is partitioning-independent — same rows)
     raw_corpus = corpus
     corpus = _ensure_parallelism(corpus)
-    lloyd_assign = (
-        ivf_assign_two_level
-        if hierarchical_assign
-        else (lambda df, c, id_col, vec_col: ivf_assign(df, c, nprobe=1, id_col=id_col, vec_col=vec_col))
-    )
-    if num_centroids > CODEBOOK_COLLECT_MAX:
+    spark = corpus.sparkSession
+    local = num_centroids <= CODEBOOK_COLLECT_MAX
+    if local:
+        # one take job brings the k seeds to the driver, where every
+        # consumer of the book reads them (arrow_kernels.codebook_rows)
+        seeds = md5_seed_vectors(raw_corpus, num_centroids, id_col, vec_col)
+        cents = local_codebook(spark, list(enumerate(seeds)), _IVF_BOOK)
+    else:
         seed_ids = _ivf_seed_rank(corpus, num_centroids, id_col=id_col)
         # Broadcast the k-row id frame back onto the corpus while it is
         # broadcast-SIZED (~30 MB of (id, int) at k=10^6); past that the
@@ -648,52 +683,17 @@ def ivf_centroids(
             .select("centroid_id", "_centroid")
             .localCheckpoint(eager=True)
         )
-    else:
-        # Seed rank via ONE TakeOrderedAndProject job collected straight to
-        # the driver: k ≤ CODEBOOK_COLLECT_MAX rows (the same bound every
-        # downstream assign already needs driver-side), ranked by the md5
-        # hex — Python's str ordering over lowercase hex equals Spark's
-        # UTF8 ordering, so the driver-side sort is belt-and-braces over
-        # the already-ordered take. Replaces the orderBy+limit+row_number
-        # window + eager localCheckpoint (a full job + barrier whose only
-        # output was re-collected by the very next assign).
-        rows = (
-            raw_corpus.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias("_centroid")
-            )
-            .withColumn("_h", F.md5(F.col(id_col).cast("string")))
-            .select("_h", "_centroid")
-            .orderBy("_h")
-            .limit(num_centroids)
-            .collect()
-        )
-        rows.sort(key=lambda r: r["_h"])
-        cents = _local_codebook_df(
-            corpus.sparkSession, [(i, list(r["_centroid"])) for i, r in enumerate(rows)]
-        )
-    local_codebook = num_centroids <= CODEBOOK_COLLECT_MAX
     for _ in range(iterations):
-        assigned = lloyd_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
-        means = (
-            assigned.select("centroid_id", F.posexplode(F.col(vec_col).cast("array<double>")))
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("col").alias("_v"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "_v"))), lambda s: s["_v"]
-                ).alias("_centroid")
-            )
+        assigned = nearest_cell(corpus, cents, id_col, vec_col, hierarchical_assign)
+        means = lloyd_means(
+            assigned, ["centroid_id"], F.col(vec_col).cast("array<double>"), "_centroid"
         )
-        if local_codebook:
-            # the refined codebook is k-bounded: collect it (one job — the
+        if local:
+            # the refined book is k-bounded: collect it (one job — the
             # corpus pass itself) and keep it driver-side for the next
-            # consumer instead of checkpointing + re-collecting. Values are
-            # the identical Spark-computed means either way.
-            cb = sorted(
-                (int(r["centroid_id"]), list(r["_centroid"])) for r in means.collect()
-            )
-            cents = _local_codebook_df(corpus.sparkSession, cb)
+            # consumer instead of checkpointing + re-collecting
+            book = sorted((int(r[0]), list(r[1])) for r in means.collect())
+            cents = local_codebook(spark, book, _IVF_BOOK)
         else:
             cents = means.localCheckpoint(eager=True)
     return cents
@@ -759,10 +759,9 @@ def _ivf_assign1_jvm(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The pre-round-8 JVM nprobe=1 assignment (N·k interpreted-fold
-    crossJoin → map-side max_by partial agg → join-back), retained as the
-    reference twin for the Arrow kernel's exact-equality pin
-    (tests/test_arrow_kernels.py) and as the fallback if a deployment
-    cannot run Python workers."""
+    crossJoin → map-side max_by partial agg → join-back). A test reference
+    only: the independent twin the Arrow kernel is pinned exact-equal to
+    (tests/test_arrow_kernels.py); no builder or operator routes here."""
     scored = df.select(id_col, vec_col).crossJoin(F.broadcast(centroids)).select(
         id_col,
         cosine(F.col(vec_col), F.col("_centroid")).alias("_cscore"),
@@ -838,9 +837,9 @@ def _ivf_assign_two_level_jvm(
 ) -> DataFrame:
     """The pre-round-8 JVM two-level assignment (interpreted-fold
     crossJoins + max_by partial aggs — level 1 routes via N·m skinny
-    max_by, level 2 argmaxes within the routed group), retained as the
-    Arrow kernel's exact-equality reference twin and as the fallback for
-    deployments that cannot run Python workers. Semantics documented on
+    max_by, level 2 argmaxes within the routed group). A test reference
+    only: the independent twin the Arrow kernel is pinned exact-equal to;
+    no builder or operator routes here. Semantics documented on
     ``ivf_assign_two_level``.
     """
     k = centroids.count()
@@ -1072,7 +1071,7 @@ def _pq_assign_jvm(sliced: DataFrame, codebook: DataFrame, id_col: str = "vec_id
     )
 
 
-def pq_assign_codes(
+def pq_encode(
     corpus: DataFrame,
     codebook: DataFrame,
     num_subspaces: int = 4,
@@ -1080,11 +1079,17 @@ def pq_assign_codes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Fused Arrow PQ assignment: ALL subspace codes for a vector in one
-    ``mapInPandas`` pass over the corpus — (id, m, code) long form,
+    """PQ encoding: per (vector, subspace), the id of the nearest subspace
+    centroid by squared L2 — the m·log2(ks)-bit code that replaces the full
+    vector downstream (64 floats → 4 bytes here; ×64 compression is what
+    makes 100 TB ANN corpora RAM-resident). Returns the long form
+    (id, m, code).
+
+    ONE fused Arrow ``mapInPandas`` pass computes all M codes per vector,
     bit-identical to the JVM slice→explode→broadcast-join→min_by chain
-    but with no N·M exploded frame, no N·M·ks interpreted l2sq folds,
-    and no (id, m)-keyed shuffle at all (the codes ride the scan).
+    (``_pq_assign_jvm``) but with no N·M exploded frame, no N·M·ks
+    interpreted l2sq folds, and no (id, m)-keyed shuffle at all (the
+    codes ride the scan).
 
     Bit-exactness: per subspace the kernel slices the float64-widened
     vector and accumulates (v−c)² one dimension at a time — the JVM
@@ -1093,34 +1098,17 @@ def pq_assign_codes(
     cid-ascending centroid matrix. Pinned exact-equal to
     ``_pq_assign_jvm`` in tests/test_arrow_kernels.py.
 
-    The codebook (M·ks rows, ≤16k in production) collects driver-side —
-    the same rows ``F.broadcast`` shipped before, guarded at
-    ``arrow_kernels.CODEBOOK_COLLECT_MAX`` total rows like every other
-    kernel codebook (limit(max+1) bounds driver memory even when the
-    guard fires)."""
+    The codebook (M·ks rows, ≤16k in production) is held driver-side
+    through ``arrow_kernels.codebook_rows`` — the same rows ``F.broadcast``
+    shipped before, under the one ``CODEBOOK_COLLECT_MAX`` guard."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     import numpy as np
 
-    from sql_query_engine_rs_spark.functions.arrow_kernels import (
-        CODEBOOK_COLLECT_MAX,
-        CodebookTooLarge,
-    )
+    from sql_query_engine_rs_spark.functions.arrow_kernels import codebook_rows
 
     sub = dim // num_subspaces
-    rows = getattr(codebook, "_sgr_pq_rows", None)
-    if rows is None:
-        rows = (
-            codebook.select("m", "centroid_id", "_centroid")
-            .limit(CODEBOOK_COLLECT_MAX + 1)
-            .collect()
-        )
-    if len(rows) > CODEBOOK_COLLECT_MAX:
-        raise CodebookTooLarge(
-            f"PQ codebook exceeds CODEBOOK_COLLECT_MAX={CODEBOOK_COLLECT_MAX} "
-            "rows (M*ks); shrink ks or route through the distributed "
-            "bucketed-join path — see arrow_kernels.CODEBOOK_COLLECT_MAX."
-        )
+    rows = codebook_rows(codebook, ("m", "centroid_id", "_centroid"))
     per_m: dict[int, tuple] = {}
     for m in range(num_subspaces):
         mrows = sorted(((r[1], r[2]) for r in rows if r[0] == m), key=lambda x: x[0])
@@ -1194,123 +1182,40 @@ def pq_codebook(
 
     Returns (m int, centroid_id int, _centroid array<double>) —
     ≤ num_subspaces × num_centroids rows, always broadcastable (a production
-    64-subspace × 256-centroid book is 16k skinny rows). Each Lloyd step
-    costs one N·M·ks scoring pass + one (m, code, dim)-keyed shuffle whose
-    cardinality is M·ks·sub — trivial."""
+    64-subspace × 256-centroid book is 16k skinny rows); a book past
+    ``arrow_kernels.CODEBOOK_COLLECT_MAX`` rows raises ``CodebookTooLarge``
+    up front. Each Lloyd step costs one N·M·ks scoring pass + one
+    (m, code, dim)-keyed shuffle whose cardinality is M·ks·sub — trivial."""
     from sql_query_engine_rs_spark.functions.arrow_kernels import (
-        CODEBOOK_COLLECT_MAX,
+        check_codebook_size,
+        local_codebook,
     )
 
+    # every consumer of the book (pq_encode, hence pq_topk) holds it
+    # driver-side, so a book past the bound is refused before any job
+    check_codebook_size(num_subspaces * num_centroids)
+    spark = corpus.sparkSession
     sub = dim // num_subspaces
-    local_codebook = num_subspaces * num_centroids <= CODEBOOK_COLLECT_MAX
-
-    def _local_pq_df(cb_rows):
-        """(m, centroid_id, _centroid) local relation tagged with its
-        driver-side rows so ``pq_assign_codes`` skips the re-collect job —
-        the same k-bounded round-trip economy as ``_local_codebook_df``."""
-        df = corpus.sparkSession.createDataFrame(
-            cb_rows, schema="m int, centroid_id int, _centroid array<double>"
-        )
-        df._sgr_pq_rows = cb_rows
-        return df
-
-    if local_codebook:
-        # ONE TakeOrderedAndProject job collects the ks seed vectors;
-        # ranking and subspace slicing are exact driver-side (list slicing,
-        # no FP math) — replaces the orderBy window + explode/slice plan +
-        # eager localCheckpoint barrier.
-        rows = (
-            corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-            .withColumn("_h", F.md5(F.col(id_col).cast("string")))
-            .select("_h", "_v")
-            .orderBy("_h")
-            .limit(num_centroids)
-            .collect()
-        )
-        rows.sort(key=lambda r: r["_h"])
-        cb = _local_pq_df(
-            [
-                (m, i, list(r["_v"])[m * sub : (m + 1) * sub])
-                for i, r in enumerate(rows)
-                for m in range(num_subspaces)
-            ]
-        )
-    else:
-        seeds = (
-            corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-            .withColumn("_h", F.md5(F.col(id_col).cast("string")))
-            .orderBy("_h")
-            .limit(num_centroids)
-        )
-        w = Window.orderBy("_h")
-        seeds = seeds.select((F.row_number().over(w) - 1).alias("centroid_id"), "_v")
-        cb = (
-            seeds.select(
-                F.explode(F.expr(f"sequence(0, {num_subspaces - 1})")).alias("m"),
-                "centroid_id",
-                "_v",
-            )
-            .select("m", "centroid_id", F.expr(f"slice(_v, m * {sub} + 1, {sub})").alias("_centroid"))
-            .localCheckpoint(eager=True)
-        )
+    seeds = md5_seed_vectors(corpus, num_centroids, id_col, vec_col)
+    book = [
+        (m, i, v[m * sub : (m + 1) * sub])
+        for i, v in enumerate(seeds)
+        for m in range(num_subspaces)
+    ]
+    cb = local_codebook(spark, book, _PQ_BOOK)
     if iterations:
         sliced = _pq_slices(corpus, num_subspaces, dim, id_col, vec_col)
         for _ in range(iterations):
-            assigned = pq_assign_codes(
+            assigned = pq_encode(
                 corpus, cb, num_subspaces=num_subspaces, dim=dim,
                 id_col=id_col, vec_col=vec_col,
             )
-            means = (
-                sliced.join(assigned, on=[id_col, "m"])
-                .select("m", "code", F.posexplode("_sv"))
-                .groupBy("m", "code", "pos")
-                .agg(F.avg("col").alias("_c"))
-                .groupBy("m", "code")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "_c"))), lambda s: s["_c"]
-                    ).alias("_centroid")
-                )
-                .select("m", F.col("code").alias("centroid_id"), "_centroid")
+            means = lloyd_means(
+                sliced.join(assigned, on=[id_col, "m"]), ["m", "code"], "_sv", "_centroid"
             )
-            if local_codebook:
-                # M·ks-bounded refined book: collect (the corpus pass is the
-                # job) and keep driver-side — identical Spark-computed means,
-                # no checkpoint barrier + re-collect per consumer.
-                cb = _local_pq_df(
-                    sorted(
-                        (int(r["m"]), int(r["centroid_id"]), list(r["_centroid"]))
-                        for r in means.collect()
-                    )
-                )
-            else:
-                cb = means.localCheckpoint(eager=True)
+            book = sorted((int(r[0]), int(r[1]), list(r[2])) for r in means.collect())
+            cb = local_codebook(spark, book, _PQ_BOOK)
     return cb
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    num_subspaces: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ encoding: per (vector, subspace), the id of the nearest subspace
-    centroid by squared L2 — the m·log2(ks)-bit code that replaces the full
-    vector downstream (64 floats → 4 bytes here; ×64 compression is what
-    makes 100 TB ANN corpora RAM-resident).
-
-    Returns the long form (id, m, code). Since round 8 this is ONE fused
-    Arrow pass (``pq_assign_codes``): all M codes per vector computed
-    map-side against the driver-collected codebook — no exploded N·M
-    frame, no interpreted folds, no shuffle (the JVM
-    slice/explode/broadcast-join/min_by twin ``_pq_assign_jvm`` is
-    retained and pinned exact-equal in tests)."""
-    return pq_assign_codes(
-        corpus, codebook, num_subspaces=num_subspaces, dim=dim,
-        id_col=id_col, vec_col=vec_col,
-    )
 
 
 def pq_topk(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from sql_query_engine_rs_spark.functions import dedup as D
 from sql_query_engine_rs_spark.functions import similarity as S
 from sql_query_engine_rs_spark.functions import text as T
+from sql_query_engine_rs_spark.functions.expressions import portable_round as pround
 from sql_query_engine_rs_spark.functions.multimodal import image_features
 from sql_query_engine_rs_spark.operators import (
     broadcast_join,
@@ -283,18 +284,6 @@ def docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sql_query_engine_rs_spark.functions.partitioning import ensure_parallelism
 
     return ensure_parallelism(t(spark, sf_dir, "documents"))
-
-
-def pround(c, n: int = 2):
-    """Portable round: floor(x*10^n + 0.5)/10^n computed in float64.
-
-    Spark's ``round`` is decimal-string HALF_UP (BigDecimal) while DuckDB
-    rounds the binary double — they disagree whenever the double sits just
-    below a .5 decimal boundary (e.g. 8285.425). floor-based rounding uses
-    identical double ops on both engines, so results are bit-identical.
-    """
-    f = 10 ** n
-    return F.floor(c * f + F.lit(0.5)) / f
 
 
 def r2(c):  # rounded double aggregate, the cross-engine float convention
@@ -11443,17 +11432,7 @@ def pipe_emb_outliers(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("_v")
     )
-    cent = (
-        emb.select("label", F.posexplode("_v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.avg("val").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-            ).alias("carr")
-        )
-    )
+    cent = S.lloyd_means(emb, ["label"], "_v", "carr")
     d2 = F.aggregate(
         F.zip_with(F.col("_v"), F.col("carr"), lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
@@ -12914,18 +12893,7 @@ def pipe_kmeans_lloyd(spark, sf_dir):
         # Sums of float-origin doubles are exact at any addition order
         # (24-bit mantissas + log2(N) carry < 53 bits), so the per-dim
         # mean is bit-identical to the oracle's ordered replay.
-        cent = persist_tracked(
-            a.select("cid", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("val").alias("val"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                    lambda s: s.getField("val"),
-                ).alias("c")
-            )
-        )
+        cent = persist_tracked(S.lloyd_means(a, ["cid"], "v", "c"))
     final = assign(cent)
     return final.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),

@@ -184,7 +184,7 @@ def test_pq_assign_codes_matches_jvm_exactly(spark, emb):
     }
     arw = {
         (r[0], r[1]): r[2]
-        for r in S.pq_assign_codes(emb, cb, num_subspaces=M, dim=DIM).collect()
+        for r in S.pq_encode(emb, cb, num_subspaces=M, dim=DIM).collect()
     }
     cb.unpersist()
     assert jvm == arw
@@ -345,19 +345,20 @@ def test_pair_dot_random_vectors_bit_exact(spark):
 
 
 def test_local_codebook_fast_path_matches_collect_path(spark, emb, cents):
-    """ivf_centroids (k <= bound) returns a local-relation codebook whose
-    driver-side rows ride a DataFrame attribute; _collect_codebook must
-    read them bit-identically to collecting the frame through Spark —
-    and any transformation (here select) drops the attribute, forcing
-    the collect path, so both routes are exercised against each other."""
-    assert getattr(cents, "_sgr_codebook_rows", None) is not None
-    assert cents._sgr_codebook_cols == ("centroid_id", "_centroid")
+    """ivf_centroids (k <= bound) returns a local_codebook frame whose
+    driver-side rows ride a DataFrame attribute; codebook_rows must read
+    them bit-identically to collecting the frame through Spark — and any
+    transformation (here select) drops the attribute, forcing the
+    collect path, so both routes are exercised against each other."""
+    rows, cols = cents._sgr_codebook
+    assert cols == ("centroid_id", "_centroid")
     # attribute rows == the frame's actual rows
     frame_rows = sorted((r.centroid_id, list(r._centroid)) for r in cents.collect())
-    assert sorted(cents._sgr_codebook_rows) == frame_rows
+    assert sorted(rows) == frame_rows
+    assert AK.codebook_rows(cents, cols) is rows
     # assignment through the fast path == through the collect path
     stripped = cents.select("centroid_id", "_centroid")  # attribute lost
-    assert getattr(stripped, "_sgr_codebook_rows", None) is None
+    assert getattr(stripped, "_sgr_codebook", None) is None
     fast = _as_map(AK.assign_nearest(emb, cents).select("vec_id", "centroid_id").collect())
     slow = _as_map(AK.assign_nearest(emb, stripped).select("vec_id", "centroid_id").collect())
     assert fast == slow
@@ -368,16 +369,35 @@ def test_pq_local_codebook_fast_path_matches_collect_path(spark, emb):
     bit-identically to the same book with the attribute stripped (the
     limit+collect path)."""
     cb = S.pq_codebook(emb, num_subspaces=4, num_centroids=8, iterations=1)
-    assert getattr(cb, "_sgr_pq_rows", None) is not None
+    rows, cols = cb._sgr_codebook
+    assert cols == ("m", "centroid_id", "_centroid")
     frame_rows = sorted((r.m, r.centroid_id, list(r._centroid)) for r in cb.collect())
-    assert sorted(tuple(t) for t in cb._sgr_pq_rows) == frame_rows
+    assert sorted(tuple(t) for t in rows) == frame_rows
     stripped = cb.select("m", "centroid_id", "_centroid")
     fast = {
         (r.vec_id, r.m): r.code
-        for r in S.pq_assign_codes(emb, cb, num_subspaces=4).collect()
+        for r in S.pq_encode(emb, cb, num_subspaces=4).collect()
     }
     slow = {
         (r.vec_id, r.m): r.code
-        for r in S.pq_assign_codes(emb, stripped, num_subspaces=4).collect()
+        for r in S.pq_encode(emb, stripped, num_subspaces=4).collect()
     }
     assert fast == slow
+
+
+def test_pq_codebook_refuses_oversized_book(spark, emb, monkeypatch):
+    """A PQ book past CODEBOOK_COLLECT_MAX rows (M·ks) is refused up front:
+    every consumer (pq_encode, hence pq_topk) holds the book driver-side,
+    so building one that large would only burn jobs on a book nothing can
+    use. No Spark job may run before the raise."""
+    monkeypatch.setattr(AK, "CODEBOOK_COLLECT_MAX", 4 * 8 - 1)
+    sc = spark.sparkContext
+    group = "pq-oversized-book"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(AK.CodebookTooLarge, match="CODEBOOK_COLLECT_MAX"):
+            S.pq_codebook(emb, num_subspaces=4, num_centroids=8, iterations=1)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)

@@ -7,10 +7,14 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import pkgutil
+import subprocess
+import sys
 
 import __spark_entry__
 
-SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRIPTS = os.path.join(ROOT, "scripts")
 
 
 def _load(name: str):
@@ -35,3 +39,22 @@ def test_capture_plans_uses_the_plans_module():
     capture = _load("capture_plans")
     assert capture.plan_report is plans.plan_report
     assert capture.explain_str is plans.explain_str
+
+
+def test_every_package_module_imports_without_a_session():
+    """Each module imports in a fresh interpreter with no SparkSession: a
+    module that parses a DDL string at import (``@pandas_udf("double")``)
+    needs an active session and fails here."""
+    import sql_query_engine_rs_spark as pkg
+
+    names = [n for _, n, _ in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")]
+    assert names
+    failed = {}
+    for name in names:
+        proc = subprocess.run(
+            [sys.executable, "-c", f"import {name}"],
+            cwd=ROOT, capture_output=True, text=True, timeout=120,
+        )
+        if proc.returncode != 0:
+            failed[name] = proc.stderr.strip().splitlines()[-1:]
+    assert not failed, failed
