@@ -12,12 +12,13 @@ What this package adds on top of raw Spark:
 - ``session``     — scale-aware SparkSession factory (AQE, broadcast, Arrow).
 - ``catalog``     — the reference's ``RootCatalog`` equivalent
                     (reference: src/catalog/mod.rs:10-42): named-table
-                    registry over CSV/parquet/in-memory sources, ``\\dt``.
+                    registry over ``sources.read`` files and in-memory
+                    tables, ``\\dt``.
 - ``database``    — ``Database.run(sql)`` + meta-commands
                     (reference: src/db.rs, src/cli.rs:111-135).
-- ``operators``   — DataFrame builders for each operator in SURVEY.md §2
-                    (scan/filter/project/aggregate) plus the extension set
-                    (join/sort/setops/window).
+- ``operators``   — the operators that hide an algorithm (as-of, range
+                    and salted joins; per-group top-k). The SURVEY.md §2
+                    v0 operators are plain DataFrame calls in ``queries``.
 - ``functions``   — expression helpers and the large-scale data-pipeline
                     operators: dedup, similarity search, text analysis,
                     multimodal column plumbing.

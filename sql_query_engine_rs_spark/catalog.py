@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from sql_query_engine_rs_spark.errors import CatalogError
+from sql_query_engine_rs_spark.sources import read
 
 TESTDATA_TABLES = (
     "region",
@@ -58,11 +59,12 @@ class Catalog:
     ) -> DataFrame:
         """``\\load csv <name> <path>`` (reference: src/db.rs:27-40).
 
-        Schema is inferred when not supplied, matching the reference's
-        Arrow-based inference (src/storage/csv.rs:103,133-142; header assumed,
-        delimiter ','). Pass an explicit schema to avoid inference drift
-        (FIXTURES.md §5) — on a cluster this also avoids a full extra pass
-        over the file for inference.
+        Read through ``sources.read``: header assumed, delimiter ',' (Spark's
+        default), schema inferred when not supplied, matching the reference's
+        Arrow-based inference (src/storage/csv.rs:103,133-142). Pass an
+        explicit schema to avoid inference drift (FIXTURES.md §5) — on a
+        cluster this also avoids a full extra pass over the file for
+        inference.
 
         ``empty_strings=True`` maps empty string cells to ``""`` instead of
         NULL (Spark's CSV reader nulls all empty unquoted fields; the
@@ -72,12 +74,7 @@ class Catalog:
         from pyspark.sql import functions as F
         from pyspark.sql.types import StringType
 
-        reader = self.spark.read.option("header", True).option("delimiter", ",")
-        if schema is None:
-            reader = reader.option("inferSchema", True)
-        else:
-            reader = reader.schema(schema)
-        df = reader.csv(path)
+        df = read(self.spark, "csv", path, schema)
         if empty_strings:
             df = df.select(
                 *[
@@ -89,24 +86,15 @@ class Catalog:
             )
         return self.register(name, df)
 
-    def create_parquet_table(self, name: str, path: str) -> DataFrame:
-        """Parquet source — the scale path (column pruning + predicate pushdown)."""
-        df = self.spark.read.parquet(path)
-        return self.register(name, df)
+    def create_file_table(self, name: str, fmt: str, path: str) -> DataFrame:
+        """A table over a parquet, json or orc file (``\\load <fmt>``).
 
-    def create_json_table(self, name: str, path: str) -> DataFrame:
-        """JSON-lines source — training corpora's interchange format.
-        Schema is inferred (one extra pass); pass an explicit schema via
-        sources.read for production pipelines."""
-        df = self.spark.read.json(path)
-        return self.register(name, df)
-
-    def create_orc_table(self, name: str, path: str) -> DataFrame:
-        """ORC source — the other columnar warehouse format (Hive
-        ecosystems). Same pushdown/pruning properties as parquet: the
-        schema rides in the footer and filters reach the stripe reader."""
-        df = self.spark.read.orc(path)
-        return self.register(name, df)
+        Parquet is the scale path: column pruning plus predicate pushdown.
+        ORC has the same properties (schema in the footer, filters reach the
+        stripe reader). JSON-lines infers its schema in one extra pass; pass
+        an explicit schema through ``sources.read`` for production pipelines.
+        """
+        return self.register(name, read(self.spark, fmt, path))
 
     def create_memory_table(self, name: str, data, schema=None) -> DataFrame:
         """In-memory table (reference: src/storage/memory.rs:11-83)."""
@@ -122,7 +110,7 @@ class Catalog:
     def register_testdata(self, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES) -> None:
         """Register every driver-generated parquet table under ``sf_dir``."""
         for t in tables:
-            self.create_parquet_table(t, f"{sf_dir}/{t}.parquet")
+            self.create_file_table(t, "parquet", f"{sf_dir}/{t}.parquet")
 
     # -- lookups (reference: src/catalog/mod.rs:16-29)
 

@@ -33,16 +33,6 @@ class Database:
         self.catalog = Catalog(self.spark)
         self.echo_plan = echo_plan
 
-    # -- reference constructors (src/db.rs:21-25)
-
-    @classmethod
-    def new_on_csv(cls, spark: SparkSession | None = None) -> "Database":
-        return cls(spark)
-
-    @classmethod
-    def new_on_memory(cls, spark: SparkSession | None = None) -> "Database":
-        return cls(spark)
-
     # -- query entry point (src/db.rs:50-92)
 
     def run(self, sql: str) -> DataFrame:
@@ -225,15 +215,9 @@ class Database:
             _, fmt, name, path = parts
             if fmt == "csv":
                 self.catalog.create_csv_table(name, path)
-            elif fmt == "json":
-                # json-lines: training corpora's interchange format
-                self.catalog.create_json_table(name, path)
-            elif fmt == "orc":
-                # orc: the other columnar warehouse format (Hive ecosystems)
-                self.catalog.create_orc_table(name, path)
             else:
-                # parquet: the scale-path format (extension beyond the
-                # reference's csv-only \load, src/cli.rs:111-129)
-                self.catalog.create_parquet_table(name, path)
+                # parquet/json/orc: extensions beyond the reference's
+                # csv-only \load (src/cli.rs:111-129)
+                self.catalog.create_file_table(name, fmt, path)
             return self.catalog.show_tables()
         raise MetaCommandError(f"unknown meta command: {cmd}")

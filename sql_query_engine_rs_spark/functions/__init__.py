@@ -1,6 +1,6 @@
 """Expression helpers + large-scale data-pipeline operators.
 
-- ``expressions`` — v0 expression surface (literals, binary ops, casts).
+- ``expressions`` — ``portable_round``, the cross-engine float rounding.
 - ``text``        — language-ID, quality scoring, token counting, fingerprints.
 - ``dedup``       — exact, MinHash-LSH, SimHash, n-gram Jaccard, embedding-cosine.
 - ``similarity``  — brute-force cosine top-k + LSH-bucketed ANN.

@@ -1,26 +1,10 @@
-"""Operator layer: one builder per operator in SURVEY.md §2.
+"""Operators that hide an algorithm behind one call.
 
-Each function is a thin, composable DataFrame transformation. Catalyst owns
-physical strategy selection (the reference hand-rolls SimpleAgg vs HashAgg at
-src/optimizer/physical_rewriter.rs:33-46; Spark's planner makes the same and
-better choices, including partial/map-side aggregation the reference lacks).
+The v0 surface (scan, filter, project, SimpleAgg/HashAgg) and the plain
+extension operators (sort, limit, set ops, broadcast joins) are single
+DataFrame calls written inline in ``queries.py``; Catalyst owns physical
+strategy selection (the reference hand-rolls SimpleAgg vs HashAgg at
+src/optimizer/physical_rewriter.rs:33-46). What lives here is more than one
+call: ``join`` (as-of, bucketed as-of, range, salted) and ``window``
+(per-group top-k).
 """
-
-from sql_query_engine_rs_spark.operators.scan import table_scan, csv_scan, parquet_scan
-from sql_query_engine_rs_spark.operators.filter import filter_
-from sql_query_engine_rs_spark.operators.project import project
-from sql_query_engine_rs_spark.operators.aggregate import simple_agg, hash_agg, AGG_FUNCS
-from sql_query_engine_rs_spark.operators.join import join, broadcast_join
-from sql_query_engine_rs_spark.operators.sort import order_by, limit, top_k
-from sql_query_engine_rs_spark.operators.setops import union_all, union_distinct, intersect, except_all, distinct
-from sql_query_engine_rs_spark.operators.window import windowed
-
-__all__ = [
-    "table_scan", "csv_scan", "parquet_scan",
-    "filter_", "project",
-    "simple_agg", "hash_agg", "AGG_FUNCS",
-    "join", "broadcast_join",
-    "order_by", "limit", "top_k",
-    "union_all", "union_distinct", "intersect", "except_all", "distinct",
-    "windowed",
-]

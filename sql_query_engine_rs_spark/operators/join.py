@@ -1,31 +1,18 @@
 """Join operators — extension surface (the reference has NO joins: the binder
 ignores the join list, src/binder/table/mod.rs:15-20; SURVEY.md §2.2).
 
-Scale notes:
-- ``broadcast_join`` pins the small side as a broadcast hash join — no shuffle
-  of the fact table at all. Dimension tables (region/nation/part/customer at
-  small multiples) should always take this path; at 100 TB the fact side never
-  moves.
-- Plain ``join`` lets Catalyst+AQE choose (sort-merge for big-big, broadcast
-  when under threshold, skew-split at runtime).
-- ``colocated_join`` pre-partitions both sides on the key so repeated joins on
-  the same key reuse one shuffle (Spark reuses exchanges with identical
-  partitioning).
+Plain and broadcast equi-joins are ``left.join(right, on, how)`` and
+``left.join(F.broadcast(small), on, how)`` inline; Catalyst+AQE choose
+sort-merge, broadcast or a skew split, and a broadcast dimension table means
+the fact side never shuffles. This module holds the joins Spark has no
+single call for: as-of (plain and hot-key bucketed), band/range and salted
+skew joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def join(left: DataFrame, right: DataFrame, on, how: str = "inner") -> DataFrame:
-    return left.join(right, on=on, how=how)
-
-
-def broadcast_join(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Hash-join with the small side replicated to every executor."""
-    return big.join(F.broadcast(small), on=on, how=how)
 
 
 def asof_join(
@@ -229,18 +216,3 @@ def salted_join(
     salted_small = small.crossJoin(F.broadcast(salts))
     out = salted_big.join(salted_small, on=[key, "_salt"], how=how)
     return out.drop("_salt")
-
-
-def colocated_join(left: DataFrame, right: DataFrame, key: str | Column, num_partitions: int | None = None, how: str = "inner") -> DataFrame:
-    """Repartition both sides identically so the join is shuffle-local.
-
-    Useful when several downstream joins/aggregations share the key; the
-    exchange is planned once and reused.
-    """
-    if num_partitions:
-        left = left.repartition(num_partitions, key)
-        right = right.repartition(num_partitions, key)
-    else:
-        left = left.repartition(key)
-        right = right.repartition(key)
-    return left.join(right, on=key if isinstance(key, str) else None, how=how)

@@ -15,21 +15,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def windowed(
-    df: DataFrame,
-    partition_by: Sequence[Column | str],
-    order_by: Sequence[Column | str],
-    exprs: dict[str, Column],
-) -> DataFrame:
-    """Attach window-function columns; ``exprs`` maps alias -> window function
-    (e.g. ``{"rn": F.row_number()}``)."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    out = df
-    for alias, fn in exprs.items():
-        out = out.withColumn(alias, fn.over(w))
-    return out
-
-
 def per_group_top_k(
     df: DataFrame,
     partition_by: Sequence[Column | str],

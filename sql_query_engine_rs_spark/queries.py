@@ -37,15 +37,6 @@ from sql_query_engine_rs_spark.functions import similarity as S
 from sql_query_engine_rs_spark.functions import text as T
 from sql_query_engine_rs_spark.functions.expressions import portable_round as pround
 from sql_query_engine_rs_spark.functions.multimodal import image_features
-from sql_query_engine_rs_spark.operators import (
-    broadcast_join,
-    filter_,
-    hash_agg,
-    parquet_scan,
-    project,
-    simple_agg,
-    top_k,
-)
 from sql_query_engine_rs_spark.operators.window import per_group_top_k
 from sql_query_engine_rs_spark.streaming import windowed_counts
 
@@ -75,7 +66,7 @@ def register(name: str, oracle: str | None):
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return parquet_scan(spark, f"{sf_dir}/{name}.parquet")
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @contextmanager
@@ -122,7 +113,7 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = parquet_scan(spark, f"{sf_dir}/events.parquet")
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
     return _normalize_events_ts(df)
 
 
@@ -218,7 +209,7 @@ def _events_stream(
     """events.parquet as a normalized-``ts`` stream over a stream dir under
     ``root``: the single-batch layout, or with ``sentinels`` the
     sentinel-extended one. The static scan supplies the stream's schema."""
-    static = parquet_scan(spark, f"{sf_dir}/events.parquet")
+    static = spark.read.parquet(f"{sf_dir}/events.parquet")
     layout = _sentineled_stream_dir if sentinels else _single_batch_stream_dir
     return _normalize_events_ts(
         spark.readStream.schema(static.schema).parquet(layout(sf_dir, root))
@@ -238,7 +229,7 @@ def _sharded_stream(spark: SparkSession, sf_dir: str, table: str, root: str) -> 
         pq_arrow.write_table(
             tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
         )
-    static = parquet_scan(spark, f"{sf_dir}/{table}.parquet")
+    static = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     return (
         spark.readStream.schema(static.schema)
         .option("maxFilesPerTrigger", "1")
@@ -561,7 +552,11 @@ def _bucketed_ntile(s, k: int, order_cols, nb: int = _RANGE_BUCKETS):
 
 @register("v0_scan", "SELECT r_regionkey, r_name FROM region")
 def v0_scan(spark, sf_dir):
-    """TableScan (reference: src/executor/table_scan.rs:9-33)."""
+    """TableScan (reference: src/executor/table_scan.rs:9-33). The reference
+    pulls one single-stream batch reader with no pushdown (its
+    CsvConfig.projection hook is never set, src/storage/csv.rs:94); a Spark
+    file scan splits into ``maxPartitionBytes`` tasks and takes pushed
+    filters and pruned columns from Catalyst."""
     return t(spark, sf_dir, "region")
 
 
@@ -571,8 +566,11 @@ def v0_scan(spark, sf_dir):
 )
 def v0_projection(spark, sf_dir):
     """Project (reference: src/executor/project.rs:11-30). Column pruning
-    reaches the parquet ReadSchema — only 3 of 11 columns are read."""
-    return project(t(spark, sf_dir, "lineitem"), "l_orderkey", "l_linenumber", "l_quantity")
+    reaches the parquet ReadSchema — only 3 of 11 columns are read. Spark
+    derives different default names than the reference (``(id + 1)`` vs
+    ``id+1``, src/executor/evaluator.rs:28-56), so computed columns are
+    aliased explicitly (SURVEY.md §2.3)."""
+    return t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
 
 
 @register(
@@ -583,7 +581,7 @@ def v0_filter_comparison(spark, sf_dir):
     """Filter with `>` (reference: src/executor/filter.rs:12-27,
     array_compute.rs:57-61). Predicate is pushed to the parquet scan."""
     li = t(spark, sf_dir, "lineitem")
-    return project(filter_(li, F.col("l_quantity") > 30), "l_orderkey", "l_linenumber", "l_extendedprice")
+    return li.filter(F.col("l_quantity") > 30).select("l_orderkey", "l_linenumber", "l_extendedprice")
 
 
 @register(
@@ -594,8 +592,7 @@ def v0_filter_equality(spark, sf_dir):
     """Filter with `=` plus AND — AND binds but panics in the reference
     (src/executor/array_compute.rs:62-64); native here."""
     li = t(spark, sf_dir, "lineitem")
-    return project(
-        filter_(li, (F.col("l_returnflag") == "R") & (F.col("l_quantity") < 5)),
+    return li.filter((F.col("l_returnflag") == "R") & (F.col("l_quantity") < 5)).select(
         "l_orderkey", "l_linenumber", "l_quantity",
     )
 
@@ -611,7 +608,7 @@ def v0_project_arithmetic(spark, sf_dir):
     """Binary arithmetic ops + - * (reference: src/executor/
     array_compute.rs:47-56) with implicit int/double widening (the reference
     inserts BoundTypeCast by hand, src/binder/expression/binary_op.rs:27-63)."""
-    li = filter_(t(spark, sf_dir, "lineitem"), F.col("l_quantity") > 45)
+    li = t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -632,17 +629,14 @@ def v0_simple_agg(spark, sf_dir):
     """SimpleAgg: global count/sum/min/max incl. string min/max (reference:
     src/executor/aggregate/simple_agg.rs, count.rs, sum.rs, min_max.rs).
     count(*) is an extension (reference: agg_func.rs:48-50 todo!())."""
-    return simple_agg(
-        t(spark, sf_dir, "lineitem"),
-        [
-            F.count("l_orderkey").alias("cnt"),
-            F.count(F.lit(1)).alias("cnt_star"),
-            r2(F.sum("l_quantity")).alias("sum_qty"),
-            F.min("l_quantity").alias("min_qty"),
-            F.max("l_quantity").alias("max_qty"),
-            F.min("l_returnflag").alias("min_flag"),
-            F.max("l_returnflag").alias("max_flag"),
-        ],
+    return t(spark, sf_dir, "lineitem").agg(
+        F.count("l_orderkey").alias("cnt"),
+        F.count(F.lit(1)).alias("cnt_star"),
+        r2(F.sum("l_quantity")).alias("sum_qty"),
+        F.min("l_quantity").alias("min_qty"),
+        F.max("l_quantity").alias("max_qty"),
+        F.min("l_returnflag").alias("min_flag"),
+        F.max("l_returnflag").alias("max_flag"),
     )
 
 
@@ -656,16 +650,14 @@ def v0_simple_agg(spark, sf_dir):
 def v0_hash_agg(spark, sf_dir):
     """HashAgg, single key (reference: src/executor/aggregate/hash_agg.rs).
     Spark adds map-side partial aggregation — at 100 TB the shuffle carries
-    one partial row per (task, group), not the raw data."""
-    return hash_agg(
-        t(spark, sf_dir, "lineitem"),
-        ["l_returnflag"],
-        [
-            F.count("l_orderkey").alias("cnt"),
-            r2(F.sum("l_quantity")).alias("sum_qty"),
-            F.min("l_quantity").alias("min_qty"),
-            F.max("l_quantity").alias("max_qty"),
-        ],
+    one partial row per (task, group), not the raw data. Output order after
+    the shuffle is arbitrary (the reference emits first-appearance order,
+    hash_agg.rs:95,124); callers sort when they need an order."""
+    return t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
+        F.count("l_orderkey").alias("cnt"),
+        r2(F.sum("l_quantity")).alias("sum_qty"),
+        F.min("l_quantity").alias("min_qty"),
+        F.max("l_quantity").alias("max_qty"),
     )
 
 
@@ -679,14 +671,10 @@ def v0_hash_agg(spark, sf_dir):
 def v0_hash_agg_multi(spark, sf_dir):
     """HashAgg, multi-column key (reference: hash_utils.rs:163-222 combines
     per-column hashes; here the key tuple is hashed natively)."""
-    return hash_agg(
-        t(spark, sf_dir, "lineitem"),
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.count("l_orderkey").alias("cnt"),
-            r2(F.sum("l_quantity")).alias("sum_qty"),
-            r2(F.sum("l_extendedprice")).alias("sum_price"),
-        ],
+    return t(spark, sf_dir, "lineitem").groupBy("l_returnflag", "l_linestatus").agg(
+        F.count("l_orderkey").alias("cnt"),
+        r2(F.sum("l_quantity")).alias("sum_qty"),
+        r2(F.sum("l_extendedprice")).alias("sum_price"),
     )
 
 
@@ -702,14 +690,11 @@ def v0_agg_null_semantics(spark, sf_dir):
     """NULL aggregation semantics (reference quirk §2.4.4: COUNT counts
     non-null only; SUM/MIN/MAX over all-NULL input stay NULL)."""
     li = t(spark, sf_dir, "lineitem")
-    return simple_agg(
-        li,
-        [
-            F.count(F.lit(1)).alias("cnt_star"),
-            F.count(F.nullif(F.col("l_returnflag"), F.lit("N"))).alias("cnt_not_n"),
-            F.max(F.nullif(F.col("l_returnflag"), F.lit("R"))).alias("max_flag_not_r"),
-            r2(F.sum(F.when(F.col("l_returnflag") == "Z", F.col("l_quantity")))).alias("sum_never"),
-        ],
+    return li.agg(
+        F.count(F.lit(1)).alias("cnt_star"),
+        F.count(F.nullif(F.col("l_returnflag"), F.lit("N"))).alias("cnt_not_n"),
+        F.max(F.nullif(F.col("l_returnflag"), F.lit("R"))).alias("max_flag_not_r"),
+        r2(F.sum(F.when(F.col("l_returnflag") == "Z", F.col("l_quantity")))).alias("sum_never"),
     )
 
 
@@ -725,7 +710,7 @@ def v0_type_cast(spark, sf_dir):
     """Explicit + implicit casts on the reference's numeric ladder
     int32→int64→float64 (reference: src/types/mod.rs:127-137,
     src/binder/expression/binary_op.rs:27-63)."""
-    li = filter_(t(spark, sf_dir, "lineitem"), F.col("l_orderkey") < 100)
+    li = t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
     return li.select(
         "l_orderkey",
         (F.col("l_linenumber").cast("bigint") + F.col("l_orderkey")).alias("key_plus_line"),
@@ -748,13 +733,10 @@ def v0_type_cast(spark, sf_dir):
 def ext_avg_count_distinct(spark, sf_dir):
     """AVG / COUNT(DISTINCT) / STDDEV — all unimplemented!() in the reference
     binder (src/binder/expression/agg_func.rs:74)."""
-    return simple_agg(
-        t(spark, sf_dir, "lineitem"),
-        [
-            pround(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.countDistinct("l_returnflag").alias("n_flags"),
-            pround(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
-        ],
+    return t(spark, sf_dir, "lineitem").agg(
+        pround(F.avg("l_quantity"), 4).alias("avg_qty"),
+        F.countDistinct("l_returnflag").alias("n_flags"),
+        pround(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
     )
 
 
@@ -766,17 +748,16 @@ def ext_avg_count_distinct(spark, sf_dir):
 def ext_order_by_limit(spark, sf_dir):
     """ORDER BY + LIMIT (absent in reference, src/binder/statement/mod.rs:13-19).
     Planned as TakeOrderedAndProject: per-partition top-10 heaps, no global sort."""
-    return top_k(
-        project(t(spark, sf_dir, "lineitem"), "l_orderkey", "l_linenumber", "l_extendedprice"),
-        10,
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_extendedprice")
+    return li.orderBy(
         F.col("l_extendedprice").desc(), F.col("l_orderkey"), F.col("l_linenumber"),
-    )
+    ).limit(10)
 
 
 @register("ext_distinct", "SELECT DISTINCT o_orderpriority, o_orderstatus FROM orders")
 def ext_distinct(spark, sf_dir):
     """DISTINCT (absent in reference)."""
-    return project(t(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus").distinct()
+    return t(spark, sf_dir, "orders").select("o_orderpriority", "o_orderstatus").distinct()
 
 
 @register(
@@ -793,15 +774,12 @@ def ext_join_broadcast(spark, sf_dir):
     c = t(spark, sf_dir, "customer")
     n = t(spark, sf_dir, "nation")
     r = t(spark, sf_dir, "region")
-    joined = broadcast_join(
-        broadcast_join(c, n, F.col("c_nationkey") == F.col("n_nationkey")),
-        r,
+    joined = c.join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey")).join(
+        F.broadcast(r),
         F.col("n_regionkey") == F.col("r_regionkey"),
     )
-    return hash_agg(
-        joined,
-        ["r_name"],
-        [F.count("c_custkey").alias("n_customers"), r2(F.sum("c_acctbal")).alias("sum_bal")],
+    return joined.groupBy("r_name").agg(
+        F.count("c_custkey").alias("n_customers"), r2(F.sum("c_acctbal")).alias("sum_bal"),
     )
 
 
@@ -819,10 +797,8 @@ def ext_join_fact(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
     joined = o.join(c, F.col("o_custkey") == F.col("c_custkey"))
-    return hash_agg(
-        joined,
-        ["c_mktsegment"],
-        [F.count("o_orderkey").alias("n_orders"), r2(F.sum("o_totalprice")).alias("revenue")],
+    return joined.groupBy("c_mktsegment").agg(
+        F.count("o_orderkey").alias("n_orders"), r2(F.sum("o_totalprice")).alias("revenue"),
     )
 
 
@@ -844,21 +820,17 @@ def ext_join_fact(spark, sf_dir):
 def ext_tpch_q1(spark, sf_dir):
     """TPC-H Q1 pricing summary — the flagship aggregation. One scan, one
     partial+final hash aggregate; filter pushed to parquet."""
-    li = filter_(t(spark, sf_dir, "lineitem"), F.col("l_shipdate") <= "1998-09-02")
+    li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return hash_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            r2(F.sum("l_quantity")).alias("sum_qty"),
-            r2(F.sum("l_extendedprice")).alias("sum_base_price"),
-            r2(F.sum(disc_price)).alias("sum_disc_price"),
-            r2(F.sum(disc_price * (1 + F.col("l_tax")))).alias("sum_charge"),
-            pround(F.avg("l_quantity"), 4).alias("avg_qty"),
-            pround(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            pround(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        ],
+    return li.groupBy("l_returnflag", "l_linestatus").agg(
+        r2(F.sum("l_quantity")).alias("sum_qty"),
+        r2(F.sum("l_extendedprice")).alias("sum_base_price"),
+        r2(F.sum(disc_price)).alias("sum_disc_price"),
+        r2(F.sum(disc_price * (1 + F.col("l_tax")))).alias("sum_charge"),
+        pround(F.avg("l_quantity"), 4).alias("avg_qty"),
+        pround(F.avg("l_extendedprice"), 4).alias("avg_price"),
+        pround(F.avg("l_discount"), 4).alias("avg_disc"),
+        F.count(F.lit(1)).alias("count_order"),
     )
 
 
@@ -881,20 +853,17 @@ def ext_tpch_q3(spark, sf_dir):
     hint-broadcast — AQE picks broadcast at small SF and shuffle join at
     100 TB. o_orderdate is returned CAST to string on both sides via the
     driver-stable timestamp rendering."""
-    c = filter_(t(spark, sf_dir, "customer"), F.col("c_mktsegment") == "BUILDING")
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderdate") < "1998-03-15")
-    li = filter_(t(spark, sf_dir, "lineitem"), F.col("l_shipdate") > "1996-03-15")
+    c = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-03-15")
+    li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1996-03-15")
     joined = li.join(o.join(c, F.col("o_custkey") == F.col("c_custkey")),
                      F.col("l_orderkey") == F.col("o_orderkey"))
-    agg = hash_agg(
-        joined,
-        ["o_orderkey", "o_orderdate", "o_orderpriority"],
-        [r2(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("revenue")],
+    agg = joined.groupBy("o_orderkey", "o_orderdate", "o_orderpriority").agg(
+        r2(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("revenue"),
     )
-    return top_k(
-        agg.select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority"),
-        10, F.col("revenue").desc(), F.col("o_orderkey"),
-    )
+    return agg.select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority").orderBy(
+        F.col("revenue").desc(), F.col("o_orderkey"),
+    ).limit(10)
 
 
 @register(
@@ -905,10 +874,8 @@ def ext_tpch_q3(spark, sf_dir):
 )
 def ext_having(spark, sf_dir):
     """HAVING (absent in reference) — post-aggregation filter."""
-    agg = hash_agg(
-        t(spark, sf_dir, "lineitem"),
-        ["l_suppkey"],
-        [F.count(F.lit(1)).alias("n_items"), F.sum("l_quantity").alias("_raw_sum")],
+    agg = t(spark, sf_dir, "lineitem").groupBy("l_suppkey").agg(
+        F.count(F.lit(1)).alias("n_items"), F.sum("l_quantity").alias("_raw_sum"),
     )
     return (
         agg.filter((F.col("n_items") > 120) & (F.col("_raw_sum") > 3000))
@@ -925,8 +892,8 @@ def ext_having(spark, sf_dir):
 def ext_subquery_in(spark, sf_dir):
     """IN-subquery (absent in reference) — planned as a left-semi join.
     The qualifying-customer key set is data-proportional → AQE-planned."""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_totalprice") > 300000)
-    rich = filter_(t(spark, sf_dir, "customer"), F.col("c_acctbal") > 9000).select("c_custkey")
+    o = t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
+    rich = t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000).select("c_custkey")
     return o.join(rich, F.col("o_custkey") == F.col("c_custkey"), "left_semi").select(
         "o_orderkey", "o_totalprice"
     )
@@ -957,10 +924,10 @@ def ext_scalar_subquery(spark, sf_dir):
 )
 def ext_union(spark, sf_dir):
     """UNION ALL (reference: todo!() on any set op, src/binder/statement/mod.rs:23-26)."""
-    a = filter_(t(spark, sf_dir, "customer"), F.col("c_acctbal") > 9500).select(
+    a = t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9500).select(
         F.col("c_custkey").alias("entity_key"), F.lit("high_balance").alias("tag")
     )
-    b = filter_(t(spark, sf_dir, "orders"), F.col("o_totalprice") > 450000).select(
+    b = t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000).select(
         F.col("o_custkey").alias("entity_key"), F.lit("big_order").alias("tag")
     )
     return a.unionByName(b)
@@ -975,8 +942,8 @@ def ext_union(spark, sf_dir):
 def ext_intersect(spark, sf_dir):
     """INTERSECT: customers with both urgent and low-priority orders."""
     o = t(spark, sf_dir, "orders")
-    a = filter_(o, F.col("o_orderpriority") == "1-URGENT").select(F.col("o_custkey").alias("custkey"))
-    b = filter_(o, F.col("o_orderpriority") == "5-LOW").select(F.col("o_custkey").alias("custkey"))
+    a = o.filter(F.col("o_orderpriority") == "1-URGENT").select(F.col("o_custkey").alias("custkey"))
+    b = o.filter(F.col("o_orderpriority") == "5-LOW").select(F.col("o_custkey").alias("custkey"))
     return a.intersect(b)
 
 
@@ -1030,7 +997,7 @@ def ext_window_running(spark, sf_dir):
     """Running aggregate window (cumulative spend per customer)."""
     from pyspark.sql import Window
 
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_custkey") < 100)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -1085,7 +1052,7 @@ def ext_case_when(spark, sf_dir):
 )
 def ext_string_funcs(spark, sf_dir):
     """String scalar functions (reference has none)."""
-    c = filter_(t(spark, sf_dir, "customer"), F.col("c_custkey") <= 50)
+    c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 50)
     return c.select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -2428,13 +2395,10 @@ def pipe_dedup_exact(spark, sf_dir):
     """Exact dedup accounting: rows vs distinct text vs distinct hash (the
     100 TB version groups by md5 and keeps min(id) — see pipe_dedup_groups)."""
     d = t(spark, sf_dir, "documents")
-    return simple_agg(
-        d,
-        [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("text").alias("n_distinct_texts"),
-            F.countDistinct(F.md5("text")).alias("n_distinct_hashes"),
-        ],
+    return d.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.countDistinct("text").alias("n_distinct_texts"),
+        F.countDistinct(F.md5("text")).alias("n_distinct_hashes"),
     )
 
 
@@ -4000,7 +3964,7 @@ def ext_anti_join(spark, sf_dir):
     (Every customer has SOME order in this data, so the filter keeps the
     result set non-trivial.)"""
     c = t(spark, sf_dir, "customer")
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderpriority") == "1-URGENT")
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return c.join(o, F.col("o_custkey") == F.col("c_custkey"), "left_anti").select("c_custkey", "c_name")
 
 
@@ -4013,7 +3977,7 @@ def ext_anti_join(spark, sf_dir):
 def ext_semi_exists(spark, sf_dir):
     """LEFT SEMI join (correlated EXISTS): customers with an urgent order."""
     c = t(spark, sf_dir, "customer")
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderpriority") == "1-URGENT")
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return c.join(o, F.col("o_custkey") == F.col("c_custkey"), "left_semi").select("c_custkey", "c_acctbal")
 
 
@@ -4123,10 +4087,10 @@ def ext_window_dist_funcs(spark, sf_dir):
 def ext_array_agg(spark, sf_dir):
     """Array aggregation: sorted per-group key list, serialized to a string
     so the cross-engine hash compares scalars, not array encodings."""
-    c = filter_(t(spark, sf_dir, "customer"), F.col("c_custkey") < 200)
+    c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 200)
     n = t(spark, sf_dir, "nation")
     return (
-        broadcast_join(c, n, F.col("c_nationkey") == F.col("n_nationkey"))
+        c.join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(
             F.concat_ws(",", F.array_sort(F.collect_list("c_custkey"))).alias("custkeys"),
@@ -4465,7 +4429,7 @@ def ext_window_first_last(spark, sf_dir):
     )
     big = F.when(F.col("o_totalprice") > 150000, F.col("o_orderkey"))
     return (
-        filter_(t(spark, sf_dir, "orders"), F.col("o_custkey") < 100)
+        t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
         .select(
             "o_orderkey",
             "o_custkey",
@@ -4647,7 +4611,7 @@ def ext_regexp_extract(spark, sf_dir):
 )
 def ext_null_funcs(spark, sf_dir):
     """NULL-handling scalar functions: coalesce/nullif/greatest/least."""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderkey") < 200)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 200)
     return o.select(
         "o_orderkey",
         F.coalesce(F.nullif(F.col("o_orderstatus"), F.lit("O")), F.lit("open")).alias("status_or_open"),
@@ -4742,14 +4706,13 @@ def ext_tpch_q5(spark, sf_dir):
     join strategy — broadcast at small SF, shuffle join at 100 TB where a
     forced broadcast of a year of orders would OOM every executor."""
     c = t(spark, sf_dir, "customer")
-    o = filter_(
-        t(spark, sf_dir, "orders"),
+    o = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01"),
     )
     li = t(spark, sf_dir, "lineitem")
     s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
-    r = filter_(t(spark, sf_dir, "region"), F.col("r_name") == "ASIA")
+    r = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     joined = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -4834,7 +4797,7 @@ def ext_window_battery(spark, sf_dir):
     partition spec — a single shuffle + sort serves all five."""
     from pyspark.sql import Window
 
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_custkey") < 50)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
     w = Window.partitionBy("o_orderpriority").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     w_asc = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return o.select(
@@ -4879,7 +4842,7 @@ def ext_date_arithmetic(spark, sf_dir):
     """Date arithmetic: datediff / date_add / last_day / day-of-week.
     (Spark dayofweek is 1=Sunday..7; DuckDB DOW is 0=Sunday..6 — offset by
     one on the Spark side for parity.)"""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderkey") < 300)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 300)
     d = F.col("o_orderdate").cast("date")
     return o.select(
         "o_orderkey",
@@ -4903,8 +4866,7 @@ def ext_date_arithmetic(spark, sf_dir):
 def ext_tpch_q4(spark, sf_dir):
     """TPC-H Q4 order-priority checking: correlated EXISTS with an
     inequality (late-shipped lineitems) -> left-semi join + group-by."""
-    o = filter_(
-        t(spark, sf_dir, "orders"),
+    o = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01"),
     )
     li = t(spark, sf_dir, "lineitem")
@@ -4962,7 +4924,7 @@ def pipe_embedding_dedup_lsh(spark, sf_dir):
 def ext_unpivot(spark, sf_dir):
     """Unpivot (wide -> long) via ``stack`` — the inverse of pivot. The
     oracle spells it as UNION ALL, the portable relational formulation."""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderkey") < 100)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 100)
     return o.selectExpr(
         "o_orderkey",
         "stack(2, 'totalprice', o_totalprice, 'custkey', CAST(o_custkey AS DOUBLE)) AS (metric, value)",
@@ -4989,7 +4951,7 @@ def ext_scd2_merge(spark, sf_dir):
     Iceberg this is one MERGE INTO; the plan shape is identical."""
     c = t(spark, sf_dir, "customer")
     updates = (
-        filter_(c, F.col("c_custkey") < 100)
+        c.filter(F.col("c_custkey") < 100)
         .select(
             "c_custkey",
             "c_name",
@@ -5084,7 +5046,7 @@ def ext_cross_join(spark, sf_dir):
     """Explicit cross join (reference panics on non-Table factors,
     src/binder/table/mod.rs:56). Both sides tiny -> broadcast nested loop."""
     r = t(spark, sf_dir, "region")
-    n = filter_(t(spark, sf_dir, "nation"), F.col("n_regionkey") == 0)
+    n = t(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 0)
     return r.crossJoin(n).select("r_name", "n_name")
 
 
@@ -5333,10 +5295,9 @@ def ext_tpch_q8(spark, sf_dir):
     at every SF); part — even type-filtered — plus orders/customer/supplier
     grow with the data, so AQE owns their join strategy. Ratio computed
     after a single grouped pass (two conditional sums, one shuffle)."""
-    p = filter_(t(spark, sf_dir, "part"), F.col("p_type") == "ECONOMY")
+    p = t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     li = t(spark, sf_dir, "lineitem")
-    o = filter_(
-        t(spark, sf_dir, "orders"),
+    o = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01"),
     )
     c = t(spark, sf_dir, "customer")
@@ -5347,7 +5308,7 @@ def ext_tpch_q8(spark, sf_dir):
     n2 = t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("nation")
     )
-    r = filter_(t(spark, sf_dir, "region"), F.col("r_name") == "ASIA")
+    r = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     joined = (
         li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -5388,9 +5349,8 @@ def ext_tpch_q10(spark, sf_dir):
     nation dim broadcast (orders/customer stay AQE-planned — a quarter of
     orders is still data-proportional), top-20 via TakeOrderedAndProject
     (no global sort)."""
-    li = filter_(t(spark, sf_dir, "lineitem"), F.col("l_returnflag") == "R")
-    o = filter_(
-        t(spark, sf_dir, "orders"),
+    li = t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01"),
     )
     c = t(spark, sf_dir, "customer")
@@ -5400,15 +5360,12 @@ def ext_tpch_q10(spark, sf_dir):
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
     )
-    agg = hash_agg(
-        joined,
-        ["c_custkey", "c_name", "c_acctbal", "n_name"],
-        [r2(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("revenue")],
+    agg = joined.groupBy("c_custkey", "c_name", "c_acctbal", "n_name").agg(
+        r2(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("revenue"),
     )
-    return top_k(
-        agg.select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name"),
-        20, F.col("revenue").desc(), F.col("c_custkey"),
-    )
+    return agg.select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name").orderBy(
+        F.col("revenue").desc(), F.col("c_custkey"),
+    ).limit(20)
 
 
 @register(
@@ -5454,8 +5411,7 @@ def ext_tpch_q14(spark, sf_dir):
     lineitem's shipdate range prunes before the join. part is
     data-proportional (SF x 200k rows) so its join is AQE-planned, not
     hint-broadcast."""
-    li = filter_(
-        t(spark, sf_dir, "lineitem"),
+    li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-02-01"),
     )
     p = t(spark, sf_dir, "part")
@@ -5488,8 +5444,7 @@ def ext_tpch_q15(spark, sf_dir):
     back. The revenue frame is computed once and reused for its own max;
     only the SINGLE-ROW max frame keeps a broadcast hint (bounded by
     construction) — supplier is data-proportional and AQE-planned."""
-    li = filter_(
-        t(spark, sf_dir, "lineitem"),
+    li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01"),
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
@@ -5520,7 +5475,7 @@ def ext_tpch_q17(spark, sf_dir):
     both sides via an AQE-reused exchange. The brand-filtered part list and
     the per-part aggregate both scale with the data (1/1000 of parts is
     still millions of rows at 100 TB), so neither is hint-broadcast."""
-    p = filter_(t(spark, sf_dir, "part"), F.col("p_brand") == "Brand#12").select("p_partkey")
+    p = t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#12").select("p_partkey")
     li = t(spark, sf_dir, "lineitem").join(
         p, F.col("l_partkey") == F.col("p_partkey")
     )
@@ -5584,8 +5539,7 @@ def ext_tpch_q19(spark, sf_dir):
     """TPC-H Q19 discounted revenue: disjunctive mixed-table predicates.
     The part-only disjuncts (brand+size) are pre-filtered before the
     broadcast so the join build side shrinks; the residual OR runs post-join."""
-    p = filter_(
-        t(spark, sf_dir, "part"),
+    p = t(spark, sf_dir, "part").filter(
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5))
         | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 10))
         | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 15)),
@@ -6680,7 +6634,7 @@ def ext_bool_string_agg(spark, sf_dir):
     """Boolean aggregates (bool_and/bool_or) + ordered string aggregation
     (sorted collect_set -> concat_ws == DuckDB string_agg DISTINCT...ORDER BY,
     made deterministic by the explicit sort)."""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_custkey") < 30)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 30)
     return o.groupBy("o_orderpriority").agg(
         F.bool_and(F.col("o_totalprice") > 1000).alias("all_over_1k"),
         F.bool_or(F.col("o_orderstatus") == "F").alias("any_finished"),
@@ -6708,7 +6662,7 @@ def ext_window_frames(spark, sf_dir):
     well-defined — the default frame would return the current row)."""
     from pyspark.sql import Window
 
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_custkey") < 100)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     ordered = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     sliding = ordered.rowsBetween(-2, Window.currentRow)
     whole = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -6775,7 +6729,7 @@ def ext_resample_gapfill(spark, sf_dir):
     = 0). The dense grid comes from sequence()+explode — generated, not
     stored; the left join back is per-user co-partitioned. The canonical
     prep step for windowed models over sparse event streams."""
-    ev = filter_(events_table(spark, sf_dir), F.col("user_id") < 20)
+    ev = events_table(spark, sf_dir).filter(F.col("user_id") < 20)
     hourly = ev.groupBy(
         "user_id", F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -6843,7 +6797,7 @@ def ext_global_sort(spark, sf_dir):
     """Full ORDER BY (no LIMIT): plans as range-partitioned Exchange +
     per-partition sort — the scalable total order (sampled range bounds, no
     single-node sort). Distinct from top-k, which never totally sorts."""
-    c = filter_(t(spark, sf_dir, "customer"), F.col("c_nationkey") == 3)
+    c = t(spark, sf_dir, "customer").filter(F.col("c_nationkey") == 3)
     return c.select("c_custkey", "c_acctbal").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey")
     )
@@ -6868,8 +6822,7 @@ def ext_tpch_q12(spark, sf_dir):
     The operator shape is intact: fact-fact equijoin + two conditional
     sums in ONE grouped pass. AQE plans the join (both sides
     data-proportional)."""
-    li = filter_(
-        t(spark, sf_dir, "lineitem"),
+    li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01"),
     )
     o = t(spark, sf_dir, "orders")
@@ -6911,7 +6864,7 @@ def ext_tpch_q21(spark, sf_dir):
     suppkey-inequality residual — all three lineitem passes share the
     orderkey shuffle key, so AQE reuses one exchange. Top-20 via
     TakeOrderedAndProject."""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderstatus") == "F").select(
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
@@ -6946,7 +6899,7 @@ def ext_tpch_q21(spark, sf_dir):
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
     )
-    return top_k(agg, 20, F.col("numwait").desc(), F.col("s_name"))
+    return agg.orderBy(F.col("numwait").desc(), F.col("s_name")).limit(20)
 
 
 # =====================================================================
@@ -7002,7 +6955,7 @@ def ext_tpch_q2(spark, sf_dir):
     dims = (
         t(spark, sf_dir, "nation")
         .join(
-            F.broadcast(filter_(t(spark, sf_dir, "region"), F.col("r_name") == "ASIA")),
+            F.broadcast(t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("n_nationkey", "n_name")
@@ -7010,7 +6963,7 @@ def ext_tpch_q2(spark, sf_dir):
     sup = t(spark, sf_dir, "supplier").join(
         F.broadcast(dims), F.col("s_nationkey") == F.col("n_nationkey")
     )
-    p = filter_(t(spark, sf_dir, "part"), F.col("p_size") == 29).select(
+    p = t(spark, sf_dir, "part").filter(F.col("p_size") == 29).select(
         "p_partkey", "p_type"
     )
     cand = (
@@ -7022,10 +6975,9 @@ def ext_tpch_q2(spark, sf_dir):
         F.col("supplycost") == F.col("_min_cost")
     )
     out = best.select("s_acctbal", "s_name", "n_name", "p_partkey", "p_type", "supplycost")
-    return top_k(
-        out, 20,
+    return out.orderBy(
         F.col("s_acctbal").desc(), F.col("n_name"), F.col("s_name"), F.col("p_partkey"),
-    )
+    ).limit(20)
 
 
 @register(
@@ -7050,7 +7002,7 @@ def ext_tpch_q9(spark, sf_dir):
     them on its own, at 100 TB they degrade gracefully to shuffle joins on
     the co-partitioned keys instead of OOMing the executors."""
     li = t(spark, sf_dir, "lineitem")
-    p = filter_(t(spark, sf_dir, "part"), F.col("p_name").like("%red%")).select("p_partkey")
+    p = t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select("p_partkey")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     sup = (
         t(spark, sf_dir, "supplier")
@@ -7097,7 +7049,7 @@ def ext_tpch_q11(spark, sf_dir):
     sup = (
         t(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(filter_(t(spark, sf_dir, "nation"), F.col("n_name") == "NATION_9")),
+            F.broadcast(t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_9")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey")
@@ -7117,7 +7069,7 @@ def ext_tpch_q11(spark, sf_dir):
         .filter(F.col("val_cents") * 1000 > F.col("_total"))
         .select("partkey", F.col("val_cents").alias("part_value_cents"))
     )
-    return top_k(out, 30, F.col("part_value_cents").desc(), F.col("partkey"))
+    return out.orderBy(F.col("part_value_cents").desc(), F.col("partkey")).limit(30)
 
 
 @register(
@@ -7146,11 +7098,10 @@ def ext_tpch_q16(spark, sf_dir):
     ps = li.select(
         F.col("l_partkey").alias("ps_partkey"), F.col("l_suppkey").alias("ps_suppkey")
     ).distinct()
-    complaints = filter_(t(spark, sf_dir, "supplier"), F.col("s_acctbal") < 0).select(
+    complaints = t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
-    p = filter_(
-        t(spark, sf_dir, "part"),
+    p = t(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#17")
         & ~F.col("p_type").isin("ECONOMY", "PROMO")
         & F.col("p_size").isin(2, 5, 11, 28, 29, 37, 42, 50),
@@ -7161,10 +7112,9 @@ def ext_tpch_q16(spark, sf_dir):
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt"))
     )
-    return top_k(
-        agg, 30,
+    return agg.orderBy(
         F.col("supplier_cnt").desc(), F.col("p_brand"), F.col("p_type"), F.col("p_size"),
-    )
+    ).limit(30)
 
 
 @register(
@@ -7198,7 +7148,7 @@ def ext_tpch_q20(spark, sf_dir):
     quantity sums (integer math), threshold filter, then a left-semi from
     supplier; bounded dims broadcast. All quantities are whole numbers so
     the ×2 compare is exact."""
-    red = filter_(t(spark, sf_dir, "part"), F.col("p_name").like("red%")).select("p_partkey")
+    red = t(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select("p_partkey")
     li = t(spark, sf_dir, "lineitem").join(
         red, F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     )
@@ -7216,7 +7166,7 @@ def ext_tpch_q20(spark, sf_dir):
     dims = (
         t(spark, sf_dir, "nation")
         .join(
-            F.broadcast(filter_(t(spark, sf_dir, "region"), F.col("r_name") == "ASIA")),
+            F.broadcast(t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("n_nationkey")
@@ -7304,7 +7254,7 @@ def pipe_bm25(spark, sf_dir):
         .groupBy("doc_id")
         .agg(pround(F.sum(score), 4).alias("bm25"))
     )
-    return top_k(out, 20, F.col("bm25").desc(), F.col("doc_id"))
+    return out.orderBy(F.col("bm25").desc(), F.col("doc_id")).limit(20)
 
 
 def _mmr_oracle(n_cand: int = 10, n_select: int = 4, lam: float = 0.5) -> str:
@@ -7537,7 +7487,7 @@ def pipe_inverted_index(spark, sf_dir):
             "posting_head"
         ),
     )
-    return top_k(out, 25, F.col("df").desc(), F.col("term"))
+    return out.orderBy(F.col("df").desc(), F.col("term")).limit(25)
 
 
 @register(
@@ -8416,8 +8366,6 @@ def pipe_weighted_sample(spark, sf_dir):
     draw a reproducible quality/length-weighted subset from 100 TB. The key
     is rounded to 9 digits on both engines so a last-ulp pow() divergence
     can't flip the cut, with doc_id as the total tie-break."""
-    from sql_query_engine_rs_spark.operators.sort import top_k
-
     h = F.md5(F.col("doc_id").cast("string"))
 
     def nib(k: int):
@@ -8428,7 +8376,7 @@ def pipe_weighted_sample(spark, sf_dir):
     u = (i_expr.cast("double") + 0.5) / 16777216.0
     key = pround(F.pow(u, 1.0 / F.greatest(F.col("n_chars"), F.lit(1))), 9)
     scored = t(spark, sf_dir, "documents").select("doc_id", "n_chars", key.alias("key"))
-    return top_k(scored, 200, F.col("key").desc(), F.col("doc_id"))
+    return scored.orderBy(F.col("key").desc(), F.col("doc_id")).limit(200)
 
 
 @register(
@@ -8922,7 +8870,7 @@ def ext_try_arith(spark, sf_dir):
     dirty row must degrade to NULL, not fail the stage — this is the
     ingest-hardening idiom. ('1-URGENT' never parses as INT → pri_int is
     all-NULL by construction; the leading digit parses fine.)"""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderkey") < 300)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 300)
     return o.select(
         "o_orderkey",
         F.col("o_orderpriority").try_cast("int").alias("pri_int"),
@@ -9215,7 +9163,7 @@ def pipe_ann_pq(spark, sf_dir):
     broadcast query tables. No counterpart in the reference (no array
     types — src/types/mod.rs:57)."""
     e = t(spark, sf_dir, "embeddings")
-    queries = filter_(e, F.col("vec_id") < 5)
+    queries = e.filter(F.col("vec_id") < 5)
     return S.pq_topk(
         e, queries, k=5, num_subspaces=16, num_centroids=32, dim=64, iterations=1
     )
@@ -9252,7 +9200,7 @@ def pipe_ann_two_stage(spark, sf_dir):
     from pyspark.sql import Window
 
     e = t(spark, sf_dir, "embeddings")
-    queries = filter_(e, F.col("vec_id") < 5)
+    queries = e.filter(F.col("vec_id") < 5)
     shortlist = S.pq_topk(
         e, queries, k=20, num_subspaces=16, num_centroids=32, dim=64, iterations=1
     ).select("query_id", "vec_id")
@@ -9806,7 +9754,7 @@ def pipe_hard_negatives(spark, sf_dir):
     (similarity.ivf_topk / pq_topk) and keep the label-mismatch filter —
     the plan shape is identical."""
     e = t(spark, sf_dir, "embeddings")
-    anchors = filter_(e, F.col("vec_id") < 5).select(
+    anchors = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_qv"),
         F.col("label").alias("_qlabel"),
@@ -9891,7 +9839,7 @@ def ext_explode_outer(spark, sf_dir):
     (plain explode drops them; at audit time those missing rows are a data
     loss bug). Arrays here are constructed so ~2/3 of rows are empty and
     the outer path is genuinely exercised."""
-    o = filter_(t(spark, sf_dir, "orders"), F.col("o_orderkey") < 200)
+    o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 200)
     arr = F.filter(
         F.sequence(F.lit(1), F.lit(1) + F.col("o_orderkey") % 3), lambda x: x > 1
     )
@@ -10016,7 +9964,7 @@ def pipe_emb_quantize_int8(spark, sf_dir):
     [0, 255] by construction (pinned via max_code). The quantize expression
     uses the floor(x+0.5) portable-rounding form, so codes — and therefore
     reconstructions and MSE — are bit-identical across engines."""
-    e = filter_(t(spark, sf_dir, "embeddings"), F.col("vec_id") < 100)
+    e = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100)
     v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("vd"))
     s = v.select(
         "vec_id",
@@ -10621,7 +10569,7 @@ def pipe_countmin_heavyhitters(spark, sf_dir):
     )
 
     exact = tok.groupBy("t").agg(F.count(F.lit(1)).alias("exact_count"))
-    probe = top_k(exact, 20, F.col("exact_count").desc(), F.col("t"))
+    probe = exact.orderBy(F.col("exact_count").desc(), F.col("t")).limit(20)
     probe_cells = None
     for r in range(4):
         pc = probe.select("t", "exact_count", F.lit(r).alias("r"), cell(r, F.col("t")).alias("cell"))
@@ -10836,7 +10784,7 @@ def stream_topk_per_window(spark, sf_dir):
             .start()
             .awaitTermination()
         )
-        return parquet_scan(spark, tgt).localCheckpoint(eager=True)
+        return spark.read.parquet(tgt).localCheckpoint(eager=True)
 
 
 def _md5_bucket4096_sql(expr: str) -> str:
@@ -10963,12 +10911,10 @@ def pipe_bloom_membership(spark, sf_dir):
         F.sum(F.bit_count("w")).cast("bigint").alias("n_set_bits")
     )
 
-    probe = top_k(
-        tok.groupBy("t").agg(F.count(F.lit(1)).alias("ns")),
-        50,
+    probe = tok.groupBy("t").agg(F.count(F.lit(1)).alias("ns")).orderBy(
         F.col("ns").desc(),
         F.col("t"),
-    ).select("t")
+    ).limit(50).select("t")
     probe_bits = None
     for h in (0, 1):
         pb = probe.select("t", pos(h, F.col("t")).alias("p")).select(
@@ -11040,12 +10986,10 @@ def pipe_dsir_resample(spark, sf_dir):
     i_expr = sum(nib(k) * (16 ** (6 - k)) for k in range(1, 7))
     u = (i_expr.cast("double") + 0.5) / 16777216.0
     key = pround(F.col("dsir_avg_logratio") / 0.5 + (-F.log(-F.log(u))), 6)
-    return top_k(
-        w.select("doc_id", "dsir_avg_logratio", key.alias("key")),
-        100,
+    return w.select("doc_id", "dsir_avg_logratio", key.alias("key")).orderBy(
         F.col("key").desc(),
         F.col("doc_id"),
-    )
+    ).limit(100)
 
 
 @register(
@@ -11256,7 +11200,7 @@ def ext_asof_join_nearest(spark, sf_dir):
     'nearest')``): each click matches the CLOSEST purchase by the same user
     in either time direction — the variant backward/forward can't express
     and the one event-attribution analyses actually want. Composed from the
-    two union-ordering window passes (operators/join.py:31 backward +
+    two union-ordering window passes (operators/join.py ``asof_join`` backward +
     forward), combined with a full-outer on the left-row id and an exact
     integer-microsecond tie-break (ties at equal gap take the backward
     match, matching the oracle's <=).
@@ -11862,7 +11806,7 @@ def stream_blocklist_filter(spark, sf_dir):
     with _stream_scope(spark) as root:
         # one static scan (one schema job) serves the stream's schema, the
         # blocklist and the batch audit below, so not _events_stream
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
+        static = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = _normalize_events_ts(
             spark.readStream.schema(static.schema).parquet(
                 _single_batch_stream_dir(sf_dir, root)
@@ -11977,7 +11921,7 @@ def ext_order_by_nulls(spark, sf_dir):
         .groupBy("c_custkey")
         .agg(F.max("o_orderdate").cast("string").alias("last_order"))
     )
-    return top_k(s, 100, F.col("last_order").desc_nulls_last(), F.col("c_custkey"))
+    return s.orderBy(F.col("last_order").desc_nulls_last(), F.col("c_custkey")).limit(100)
 
 
 @register(
@@ -12159,7 +12103,7 @@ def pipe_pmi_collocations(spark, sf_dir):
             pround(F.log(F.col("c12") * F.col("n") / (F.col("c1") * F.col("c2"))), 4).alias("pmi"),
         )
     )
-    return top_k(scored, 50, F.col("pmi").desc(), F.col("w1"), F.col("w2"))
+    return scored.orderBy(F.col("pmi").desc(), F.col("w1"), F.col("w2")).limit(50)
 
 
 @register(
@@ -16372,7 +16316,7 @@ def stream_late_data_drop(spark, sf_dir):
             p = os.path.join(src_dir, fname)
             pq_arrow.write_table(part, p)
             os.utime(p, (now - age, now - age))
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
+        static = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = _normalize_events_ts(
             spark.readStream.schema(static.schema)
             .option("maxFilesPerTrigger", "1")
@@ -18720,7 +18664,7 @@ def stream_min_watermark_union(spark, sf_dir):
             tbl.filter(pc.greater_equal(ts, split_scalar)),
             os.path.join(dir_b, "b.parquet"),
         )
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
+        static = spark.read.parquet(f"{sf_dir}/events.parquet")
         sa = _normalize_events_ts(
             spark.readStream.schema(static.schema).parquet(dir_a)
         ).withWatermark("ts", "48 hours")

@@ -330,35 +330,6 @@ def test_exact_dedup_groups_counts(spark):
     assert rows == {1: 2, 3: 1}  # min-id canonical representative
 
 
-# ---------------------------------------------------------------- pandas-UDF alternates
-
-def test_cosine_udf_matches_jvm_expression(spark, sf_dir):
-    """The Arrow-vectorized Pandas-UDF cosine and the JVM higher-order
-    expression must agree to float64 precision — either path can serve."""
-    from sql_query_engine_rs_spark.functions.pandas_udfs import cosine_udf
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    rows = pairs.select(
-        S.cosine(F.col("va"), F.col("vb")).alias("jvm"),
-        cosine_udf(F.col("va"), F.col("vb")).alias("udf"),
-    ).collect()
-    assert rows and all(abs(r.jvm - r.udf) < 1e-12 for r in rows)
-
-
-def test_token_count_udf_matches_jvm(spark, sf_dir):
-    from sql_query_engine_rs_spark.functions.pandas_udfs import token_count_udf
-    from sql_query_engine_rs_spark.functions.text import token_count
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rows = d.select(
-        token_count(F.col("text")).alias("jvm"), token_count_udf(F.col("text")).alias("udf")
-    ).collect()
-    assert rows and all(r.jvm == r.udf for r in rows)
-
-
 def test_embedding_lsh_dedup_recall(spark, sf_dir):
     """Bucket-local near-dup must be a subset of the exact pairs with
     substantial recall at 2 planes."""
@@ -998,6 +969,21 @@ def test_ivf_two_level_assignment_agreement(spark, sf_dir):
     # m = sqrt(16) = 4 coarse groups -> chance agreement ~ 1/4; require 2x
     agree = sum(1 for k in e if e[k] == t[k]) / n
     assert agree >= 0.5, f"two-level agreement {agree:.2f} vs chance 0.25"
+
+
+def test_semdedup_keeps_zero_vectors(spark):
+    """An all-zero embedding has no cosine with anything: its within-cell
+    pairs score NULL (no DIVIDE_BY_ZERO under ANSI mode), fail the
+    threshold, and the zero vector is kept."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, [rng.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(20)]
+    rows += [(20, [0.0] * 8), (21, [0.0] * 8)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    kept = {r.vec_id: r.kept for r in D.semdedup(emb, num_centroids=2, iterations=1).collect()}
+    assert len(kept) == 22
+    assert kept[20] and kept[21]
 
 
 def test_semdedup_hierarchical_invariants(spark, sf_dir):

@@ -969,12 +969,9 @@ def test_stream_variant_telemetry_one_stateful_op(spark, sf_dir):
     stateful operator (the windowed aggregate) — VARIANT parse/extract is
     stateless map work and must not add state."""
     from sql_query_engine_rs_spark.plans import plan_report
-    from sql_query_engine_rs_spark.queries import (
-        _normalize_events_ts,
-        parquet_scan,
-    )
+    from sql_query_engine_rs_spark.queries import _normalize_events_ts
 
-    events = _normalize_events_ts(parquet_scan(spark, f"{sf_dir}/events.parquet"))
+    events = _normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     v = F.parse_json("props")
     k = F.try_variant_get(v, "$.k", "int")
     out = (
